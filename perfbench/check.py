@@ -1,58 +1,55 @@
 """Output checks of the benchmark, all in DuckDB and apart from graft.
 
 batch: every query's rows against DuckDB running the query's
-`SparkEntry.oracleSql` over the same parquet, compared like
-tools/crosscheck.py (row count, name-sorted columns, exact values after
-a full sort).
+`SparkEntry.oracleSql` over the same parquet, compared with the
+functions of tools/crosscheck.py (row count, name-sorted columns, exact
+values after a full sort).
 
 stream: each streaming twin's output against a DuckDB computation over
 the events the run fed in, for every result the final watermark has
 closed; and no row dropped as late.
 """
+import hashlib
 import json
-import math
 import os
+import sys
 
 import duckdb
+import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def _key(v):
-    # total order over mixed None / NaN / values, for sorting rows
-    if v is None:
-        return (0, 0)
-    if isinstance(v, float) and math.isnan(v):
-        return (1, 0)
-    return (2, v)
-
-
-def _canon(rel):
-    cols = sorted(rel.columns)
-    rows = rel.project(", ".join(f'"{c}"' for c in cols)).fetchall()
-    return cols, sorted(rows, key=lambda r: [_key(v) for v in r])
-
-
-def _same(a, b):
-    if isinstance(a, float) and isinstance(b, float) and math.isnan(a) and math.isnan(b):
-        return True
-    return a == b
-
-
-def _connect(data):
+def _connect(data, tmp):
     con = duckdb.connect()
     con.execute(f"SET threads TO {len(os.sched_getaffinity(0))}")
-    con.execute(f"SET temp_directory = '{data}/duckdb_tmp'")
+    con.execute(f"SET temp_directory = '{tmp}/duckdb_tmp'")
     for t in TABLES:
         if os.path.exists(f"{data}/{t}.parquet"):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
     return con
 
 
-def batch(data, out):
-    """Returns one message per query whose rows differ from the oracle."""
-    con = _connect(data)
+def _oracle(con, data, sql):
+    """The oracle's rows for `sql` over `data`. The inputs are the same for
+    every seed, so the rows are computed once per input directory and SQL
+    text and kept beside the inputs."""
+    path = os.path.join(data, "oracle", hashlib.sha256(sql.encode()).hexdigest()[:16] + ".pkl")
+    if not os.path.exists(path):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        con.sql(sql).df().to_pickle(f"{path}.tmp{os.getpid()}")
+        os.rename(f"{path}.tmp{os.getpid()}", path)
+    return pd.read_pickle(path)
+
+
+def batch(data, out, tmp):
+    """Returns one message per query whose rows differ from the oracle,
+    compared with the repository's own gate replica, tools/crosscheck.py."""
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                    "tools"))
+    from crosscheck import canon, cmp_vals
+    con = _connect(data, tmp)
     with open(os.path.join(out, "oracle_sql.json")) as f:
         oracle = json.load(f)
     bad = []
@@ -61,14 +58,15 @@ def batch(data, out):
         if not os.path.isdir(path):
             bad.append(f"{name}: no output")
             continue
-        scols, srows = _canon(con.sql(f"SELECT * FROM '{path}/*.parquet'"))
-        ocols, orows = _canon(con.sql(sql))
-        if scols != ocols or len(srows) != len(orows):
-            bad.append(f"{name}: {len(srows)} rows {scols} vs oracle {len(orows)} rows {ocols}")
+        s = canon(con.sql(f"SELECT * FROM '{path}/*.parquet'").df())
+        o = canon(_oracle(con, data, sql))
+        if list(s.columns) != list(o.columns) or len(s) != len(o):
+            bad.append(f"{name}: {len(s)} rows {list(s.columns)} vs oracle "
+                       f"{len(o)} rows {list(o.columns)}")
             continue
-        diffs = sum(not _same(x, y) for s, o in zip(srows, orows) for x, y in zip(s, o))
+        diffs, max_delta = cmp_vals(s, o)
         if diffs:
-            bad.append(f"{name}: {diffs} values differ from the oracle")
+            bad.append(f"{name}: {diffs} values differ from the oracle (max delta {max_delta})")
     return bad
 
 
@@ -84,8 +82,8 @@ def _set_diff(con, name, got_sql, want_sql):
     return []
 
 
-def stream(data, out, stream_dir, res):
-    con = _connect(data)
+def stream(data, out, stream_dir, tmp, res):
+    con = _connect(data, tmp)
     con.execute(f"""CREATE VIEW ev AS SELECT event_id, epoch_us(ts) AS ts_us, user_id,
         event_type, value, props FROM events
         WHERE event_id >= {res['events_from']} AND event_id < {res['events_to']}""")

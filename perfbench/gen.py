@@ -7,10 +7,14 @@ Column names, types and value distributions follow the gate corpus the
 repository's queries and oracle SQL are written against: uniform keys,
 the 30-word document vocabulary with a 5 % share of near-duplicate
 documents (a copy of another document plus " dup"), 64-dimensional unit
-embeddings. The same seed gives byte-identical tables.
+embeddings. The tables are drawn from one fixed seed (42), so every run
+of the benchmark reads the same inputs; `datastats.py` compares them
+with the gate corpus.
 
-`value` is generated in quarter units, which doubles add exactly in any
-order, so a streaming sum can be compared exactly with DuckDB's.
+`value` follows the gate's exponential distribution (mean 50) but is
+rounded to quarter units rather than cents: doubles add quarter units
+exactly in any order, so a streaming sum can be compared exactly with
+DuckDB's.
 """
 import json
 import os
@@ -33,6 +37,7 @@ LANGS = ["en", "en", "en", "en", "en", "en", "en", "en", "de", "de", "de",
 DAY_US = 86_400_000_000
 EPOCH_1995 = 788_918_400_000_000  # 1995-01-01 in epoch microseconds
 EPOCH_2024 = 1_704_067_200_000_000  # 2024-01-01
+SEED = 42
 
 
 def _ts(us):
@@ -50,14 +55,14 @@ def _write(out, name, cols, row_groups):
                    row_group_size=rg)
 
 
-def generate(out, seed, tables, sf, n_events, n_docs, n_vecs, row_groups):
+def generate(out, tables, sf, n_events, n_docs, n_vecs, row_groups):
     """Writes the named tables under `out`; facts (lineitem, orders,
     events) and documents are split into `row_groups` parquet row groups,
     so one scan is that many tasks. Each table draws from its own seeded
     stream, so leaving one out does not change the others."""
     os.makedirs(out, exist_ok=True)
     want = set(tables)
-    rng = lambda i: np.random.default_rng([seed, i])
+    rng = lambda i: np.random.default_rng([SEED, i])
     n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
     n_ord, n_line = int(1_500_000 * sf), int(6_000_000 * sf)
 
@@ -131,21 +136,14 @@ def generate(out, seed, tables, sf, n_events, n_docs, n_vecs, row_groups):
         ts = EPOCH_2024 + np.sort(r.choice(span, n_events, replace=False))
         ev = {
             "event_id": np.arange(n_events, dtype=np.int64),
-            "ts": ts,
+            "ts": _ts(ts),
             "user_id": r.integers(0, 1500, n_events, dtype=np.int64),
             "event_type": np.array(EVENT_TYPES)[r.integers(0, 5, n_events)],
-            "value": r.integers(0, 2000, n_events) / 4.0,
+            "value": np.round(r.exponential(50.0, n_events) * 4) / 4.0,
             "props": np.array([f'{{"k": {i}}}' for i in range(100)])[r.integers(0, 100, n_events)],
         }
-        _write(out, "events", dict(ev, ts=_ts(ev["ts"])), row_groups)
-        with open(os.path.join(out, "events.jsonl"), "w") as f:
-            for i in range(n_events):
-                f.write(json.dumps({
-                    "event_id": int(ev["event_id"][i]), "ts_us": int(ev["ts"][i]),
-                    "user_id": int(ev["user_id"][i]),
-                    "event_type": str(ev["event_type"][i]),
-                    "value": float(ev["value"][i]), "props": str(ev["props"][i])},
-                    separators=(",", ":")) + "\n")
+        _write(out, "events", ev, row_groups)
+        write_jsonl(os.path.join(out, "events.parquet"), os.path.join(out, "events.jsonl"))
     if "documents" in want:
         r = rng(7)
         lens = r.integers(10, 101, n_docs)
@@ -170,3 +168,15 @@ def generate(out, seed, tables, sf, n_events, n_docs, n_vecs, row_groups):
             "vec_id": np.arange(n_vecs, dtype=np.int64),
             "embedding": pa.array(list(v), type=pa.list_(pa.float32())),
             "label": r.integers(0, 10, n_vecs, dtype=np.int32)}, 1)
+
+
+def write_jsonl(events_parquet, out):
+    """Writes an events table as JSON lines in `JsonEventSource`'s wire
+    format, in file order."""
+    ev = pq.read_table(events_parquet)
+    ev = ev.set_column(ev.schema.get_field_index("ts"), "ts_us",
+                       ev["ts"].cast(pa.int64())).to_pydict()
+    keys = ["event_id", "ts_us", "user_id", "event_type", "value", "props"]
+    with open(out, "w") as f:
+        for row in zip(*(ev[k] for k in keys)):
+            f.write(json.dumps(dict(zip(keys, row)), separators=(",", ":")) + "\n")

@@ -9,6 +9,7 @@ Usage: python3 perfbench/run.py --workload dws_olap|curation_fits|stream_ingest
 Run from the repository root. See perfbench/README.md.
 """
 import argparse
+import hashlib
 import json
 import os
 import shutil
@@ -30,21 +31,22 @@ HEAP = "4g"
 # median of all of them.
 SETUP_PROBES = 1
 JVM_TIMEOUT_S = 170
-# Inputs per workload (see gen.generate). dws_olap splits its facts into
-# one row group per core; curation_fits keeps the gate's document and
-# embedding sizes and single row group; stream_ingest's event log is
-# longer than a run consumes. The tables listed are the ones the
-# workload reads; a batch workload's rows_per_s is their row count over
-# the steady pass time.
+# Inputs per workload (see gen.generate), the same for every seed.
+# curation_fits and stream_ingest read the gate's sizes (sf0.1: 5,000
+# documents, 2,000 embeddings, 100,000 events, one row group each);
+# dws_olap splits its facts into one row group per core, as the copy
+# tools/scalegen.py makes. The tables listed are the ones the workload
+# reads; a batch workload's rows_per_s is their row count over the
+# steady pass time.
 STAR = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
 PROBE_SIZE = dict(tables=STAR + ["events", "documents", "embeddings"], sf=0.1,
-                  n_events=100_000, n_docs=5000, n_vecs=2000)
+                  n_events=100_000, n_docs=5000, n_vecs=2000, row_groups=None)
 SIZES = {
     "dws_olap": dict(tables=STAR + ["events", "documents"], sf=0.1, n_events=100_000,
                      n_docs=5000, n_vecs=0, row_groups=None),
     "curation_fits": dict(tables=["documents", "embeddings"], sf=0, n_events=0,
-                          n_docs=2000, n_vecs=1000, row_groups=1),
-    "stream_ingest": dict(tables=["events"], sf=0, n_events=60_000, n_docs=0, n_vecs=0,
+                          n_docs=5000, n_vecs=2000, row_groups=1),
+    "stream_ingest": dict(tables=["events"], sf=0, n_events=100_000, n_docs=0, n_vecs=0,
                           row_groups=1),
 }
 
@@ -56,6 +58,22 @@ def spec():
 
 def cores():
     return len(os.sched_getaffinity(0))
+
+
+def inputs(root, size):
+    """The directory holding the inputs of `size`, generated on first use
+    and reused by later runs while gen.py and the size are unchanged."""
+    size = dict(size, row_groups=size["row_groups"] or cores())
+    h = hashlib.sha256(json.dumps(size, sort_keys=True).encode())
+    with open(os.path.join(HERE, "gen.py"), "rb") as f:
+        h.update(f.read())
+    out = os.path.join(root, "data-" + h.hexdigest()[:16])
+    if not os.path.isdir(out):
+        tmp = f"{out}.tmp{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        gen.generate(tmp, **size)
+        os.rename(tmp, out)
+    return out
 
 
 def jvm(classpath, work, **args):
@@ -101,20 +119,16 @@ def main():
     root = os.path.join(build.build_dir(), "perfbench")
     work = os.path.join(root, f"run-{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
-    data = os.path.join(work, "data")
-    size = dict(SIZES[a.workload])
-    size["row_groups"] = size["row_groups"] or cores()
     t0 = time.time()
-    gen.generate(data, a.seed, **size)
-    steps = {"gen": time.time() - t0}
+    data = inputs(root, SIZES[a.workload])
+    steps = {"inputs": time.time() - t0}
 
     try:
         common = dict(workload=a.workload, data=data, seed=a.seed, seconds=a.seconds,
                       trace=a.trace)
         if a.trace:
             # the module probes read every table at the gate's size
-            common["probe_data"] = os.path.join(work, "probe_data")
-            gen.generate(common["probe_data"], a.seed, **PROBE_SIZE, row_groups=cores())
+            common["probe_data"] = inputs(root, PROBE_SIZE)
         t0 = time.time()
         setups = [jvm(classpath, os.path.join(work, f"setup{i}"), mode="setup", **common)["setup_s"]
                   for i in range(SETUP_PROBES)]
@@ -124,11 +138,15 @@ def main():
         setups.append(res["setup_s"])
         e2e = dict(res["e2e"], setup_s=statistics.median(setups))
         if a.workload == "stream_ingest":
-            mismatches = check.stream(data, os.path.join(work, "out"), os.path.join(work, "stream"), res)
+            mismatches = check.stream(data, os.path.join(work, "out"),
+                                      os.path.join(work, "stream"), work, res)
         else:
-            mismatches = check.batch(data, os.path.join(work, "out"))
+            mismatches = check.batch(data, os.path.join(work, "out"), work)
         steps["check"] = time.time() - t0 - steps["setup_probes"] - steps["run"]
         print("perfbench: step seconds", json.dumps({k: round(v, 1) for k, v in steps.items()}),
+              file=sys.stderr)
+        print("perfbench: e2e", json.dumps(e2e), file=sys.stderr)
+        print("perfbench: pass_s", json.dumps([round(v, 3) for v in res["pass_s"]]),
               file=sys.stderr)
         for k in ("per_query_cold_ms", "per_query_steady_ms"):
             if k in res:
@@ -140,10 +158,10 @@ def main():
         correct = not mismatches and not res["errors"]
         if a.workload != "stream_ingest":
             rows = sum(pq.ParquetFile(os.path.join(data, f"{t}.parquet")).metadata.num_rows
-                       for t in size["tables"])
+                       for t in SIZES[a.workload]["tables"])
             e2e["rows_per_s"] = rows / e2e["steady_pass_s"]
         if a.trace:
-            res["layers"].update({"jvm.peak_rss_mb": e2e["peak_rss_mb"], "jvm.cpu_s": e2e["cpu_s"]})
+            res["layers"]["jvm.peak_rss_mb"] = e2e["peak_rss_mb"]
             record = dict(workload=a.workload, seed=a.seed, seconds=a.seconds, e2e=e2e,
                           layers=res["layers"], detail={k: v for k, v in res.items()
                                                         if k not in ("layers", "e2e")})

@@ -7,6 +7,9 @@ import java.time.Instant
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -37,12 +40,12 @@ object Harness {
     "q_dup_cluster_histogram", "q_training_manifest", "q_classifier_holdout")
 
   /** Streaming: events per micro-batch, rounds per pass, and the fewest
-    * steady passes a run makes (100 rounds: p90 has ten samples beyond it). */
+    * steady passes a run makes. */
   val BatchEvents = 500
   val RoundsPerPass = 2
   val MinStreamPasses = 3
   /** Batch workloads: the fewest steady passes after the cold one. */
-  val MinSteadyPasses = 6
+  val MinSteadyPasses = 5
 
   def main(args: Array[String]): Unit = {
     val o = args.grouped(2).map(a => a(0).stripPrefix("--") -> a(1)).toMap
@@ -64,7 +67,7 @@ object Harness {
     val setupS = (ready.getEpochSecond * 1000000000L + ready.getNano -
       o("launch-ns").toLong) / 1e9
     if (o("mode") == "setup") {
-      Json.write(s"$work/setup.json", Map("setup_s" -> setupS))
+      writeJson(s"$work/setup.json", Map("setup_s" -> setupS))
       spark.stop()
       return
     }
@@ -79,9 +82,18 @@ object Harness {
     }
     val layers = tracer.map(t => Probes.all(spark, o("probe-data"), t)).getOrElse(Map.empty) ++
       result("layers_local").asInstanceOf[Map[String, Any]]
-    Json.write(s"$work/result.json",
+    writeJson(s"$work/result.json",
       result - "layers_local" ++ Map("setup_s" -> setupS, "layers" -> layers))
     spark.stop()
+  }
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Writes a result file (maps, sequences, strings, numbers) as JSON
+    * with the Jackson that ships with Spark. */
+  def writeJson(path: String, v: Any): Unit = {
+    Files.createDirectories(Paths.get(path).getParent)
+    mapper.writeValue(Paths.get(path).toFile, v)
   }
 
   def median(xs: Seq[Double]): Double = {
@@ -116,8 +128,8 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
 
   /** Closed loop over whole passes: pass 0 is the cold pass, later ones
     * steady; each pass runs every query once in a seed-shuffled order.
-    * Passes continue until `seconds` have elapsed and at least
-    * [[MinSteadyPasses]] steady passes are done. Afterwards, untimed,
+    * Steady passes continue until they have taken `seconds` and at
+    * least [[MinSteadyPasses]] are done. Afterwards, untimed,
     * every query's rows are written for the DuckDB check. */
   def batch(names: Seq[String]): Map[String, Any] = {
     val rng = new scala.util.Random(seed)
@@ -129,9 +141,8 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
     val passCpu = mutable.ArrayBuffer.empty[Double]
     val errors = mutable.ArrayBuffer.empty[String]
     var attempted, failed = 0
-    val t0 = System.nanoTime()
     var pass = 0
-    while (pass <= MinSteadyPasses || (System.nanoTime() - t0) / 1e9 < seconds) {
+    while (pass <= MinSteadyPasses || passWall.drop(1).sum < seconds) {
       val tag = if (pass == 0) "cold" else s"steady$pass"
       tracer.foreach(_.phase = tag)
       System.gc() // untimed: no pass inherits the previous one's garbage
@@ -167,7 +178,7 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
         .mode("overwrite").parquet(s"$work/out/$name")
       catch { case e: Throwable => errors += s"$name (output): ${e.toString.take(300)}" }
     }
-    Json.write(s"$work/out/oracle_sql.json",
+    writeJson(s"$work/out/oracle_sql.json",
       names.flatMap(n => SparkEntry.oracleSql.get(n).map(n -> _)).toMap)
 
     val steady = 1 until pass
@@ -183,11 +194,11 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
       steady.map(p => s"steady$p"))).getOrElse(Map.empty)
     Map(
       "attempted" -> attempted, "failed" -> failed, "errors" -> errors.toSeq,
-      "passes" -> pass,
+      "passes" -> pass, "pass_s" -> passWall.toSeq,
       "e2e" -> Map(
         "cold_pass_s" -> passWall.head,
         "steady_pass_s" -> median(passWall.drop(1).toSeq),
-        "cpu_s" -> median(passCpu.drop(1).toSeq),
+        "cpu_s" -> passCpu.sum,
         "batch_p50_ms" -> median(steadyLat),
         "batch_p90_ms" -> pct(steadyLat, 0.9),
         "peak_rss_mb" -> rss),
@@ -264,14 +275,13 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
       }
       passWall += (System.nanoTime() - p0) / 1e9
     }
-    val cold0 = System.nanoTime()
+    val cold0 = System.nanoTime(); val c0 = cpuNs()
     queries = startQueries()
     pass()
     val coldS = (System.nanoTime() - cold0) / 1e9
     lat.clear(); passWall.clear()
     tracer.foreach(_.phase = "timed")
     val firstTimed = next
-    val c0 = cpuNs()
     val t0 = System.nanoTime()
     val t0Ms = System.currentTimeMillis()
     while (passWall.size < MinStreamPasses || (System.nanoTime() - t0) / 1e9 < seconds) pass()
@@ -296,6 +306,7 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
       "attempted" -> (rounds + RoundsPerPass) * queries.size,
       "failed" -> 0, "errors" -> Seq.empty[String],
       "events_from" -> first, "events_to" -> next, "rounds" -> rounds,
+      "pass_s" -> (coldS +: passWall.toSeq),
       "queries" -> progress,
       "e2e" -> Map(
         "cold_pass_s" -> coldS,
@@ -303,7 +314,7 @@ class Run(spark: SparkSession, data: String, work: String, seed: Long,
         "rows_per_s" -> (next - firstTimed) / wall,
         "batch_p50_ms" -> median(lat.toSeq),
         "batch_p90_ms" -> pct(lat.toSeq, 0.9),
-        "cpu_s" -> cpu / passWall.size,
+        "cpu_s" -> cpu,
         "peak_rss_mb" -> rss),
       "layers_local" -> tracer.map(_.streamLayers(t0Ms, t1Ms, rounds)).getOrElse(Map.empty))
   }

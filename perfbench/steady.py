@@ -82,7 +82,7 @@ def main():
             q1, md, q3 = statistics.quantiles(xs, n=4)
             med[s] = statistics.median(xs)
             sp = spread(xs)
-            within = name == "setup_s" or sp <= bound
+            within = sp <= bound
             ok &= within
             print(f"{name:16} {s:3} {q1:12.4f} {med[s]:12.4f} {q3:12.4f} {sp:7.3f} {bound:6.2f}"
                   f"{'' if within else '  SPREAD > BOUND'}")
@@ -90,7 +90,7 @@ def main():
         if a.overhead:
             print(f"{'':16} tracing overhead: {100 * worse:+.1f}% ({med['B'] - med['A']:+.4f})")
             continue
-        agree = worse <= bound
+        agree = abs(worse) <= bound
         ok &= agree
         print(f"{'':16} B vs A: {100 * worse:+.1f}% worse  {'agree' if agree else 'DISAGREE'}")
     shares = {s: sum(r["failed"] for r in runs if r["set"] == s) /
