@@ -2418,6 +2418,12 @@ object Graft {
     * multiple branches (symmetrize unions, vertex projection), which
     * would otherwise re-execute an expensive upstream pipeline (e.g.
     * the capped jaccard pair generator) once per branch.
+    *
+    * `maxRounds` bounds the round loops only. A graph of at most
+    * `spark.graft.cc.smallGraphEdges` edges (default 500 000) is
+    * labeled by one union-find task instead, which has no rounds: there
+    * `maxRounds` is not enforced, and a graph that would exceed it in
+    * the loop is labeled in full rather than failing.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 64, algorithm: String = "minlabel"): DataFrame = {
@@ -2455,8 +2461,7 @@ object Graft {
     // types without a reproduced ordering (anything beyond integral /
     // floating / string / boolean) fall back to the round loop over
     // single-partition frames — still exchange-free, just per-round.
-    val small = nEdges <= edges.sparkSession.conf
-      .get("spark.graft.cc.smallGraphEdges", "500000").toLong
+    val small = nEdges <= smallGraphEdges(edges.sparkSession)
     val idType = e.schema("src").dataType
     val labels =
       if (small && smallGraphOrdering(idType).isDefined)
@@ -2467,6 +2472,20 @@ object Graft {
       .withColumn("component_size", count(lit(1)).over(Window.partitionBy("label")))
       .select(col("v").as("id"), col("label").as("component_id"),
         col("component_size"))
+  }
+
+  /** `spark.graft.cc.smallGraphEdges`, the largest edge count
+    * [[connectedComponents]] labels in one union-find task (default
+    * 500 000). A value that is not a positive integer fails here, naming
+    * the key and the value, instead of as a bare NumberFormatException
+    * or as a threshold that silently disables the path.
+    */
+  private def smallGraphEdges(spark: org.apache.spark.sql.SparkSession): Long = {
+    val key = "spark.graft.cc.smallGraphEdges"
+    val raw = spark.conf.get(key, "500000")
+    raw.trim.toLongOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a positive integer edge count, got '$raw'"))
   }
 
   /** The ordering [[smallGraphLabels]] labels minima under — it must
@@ -2531,9 +2550,18 @@ object Graft {
       }
       def see(x: Any): Unit =
         if (parent.get(x) == null) parent.put(x, x)
+      // boxed -0.0 and 0.0 are unequal HashMap keys, but the round
+      // loop's joins and distinct normalize them to one 0.0 vertex
+      def key(row: org.apache.spark.sql.Row, i: Int): Any =
+        if (row.isNullAt(i)) null
+        else row.get(i) match {
+          case d: java.lang.Double if d.doubleValue == 0.0 => 0.0d
+          case f: java.lang.Float if f.floatValue == 0.0f => 0.0f
+          case x => x
+        }
       rows.foreach { row =>
-        val a = if (row.isNullAt(0)) null else row.get(0)
-        val b = if (row.isNullAt(1)) null else row.get(1)
+        val a = key(row, 0)
+        val b = key(row, 1)
         // HashMap cannot hold a null key: track null vertices aside
         if (a == null || b == null) {
           if (a != null) see(a)

@@ -51,6 +51,24 @@ case class AsofBuf(rights: Seq[(Long, Long, Double)],
 case class AsofOut(key: Long, id: Long, ts_us: Long,
     right_id: Long, right_ts_us: Long, right_value: Double)
 
+/** One row of the unioned, tagged interval-join input: a view
+  * (`is_view`) or a purchase. `ts` is the watermark column, `t_us` its
+  * epoch micros (what the match condition compares), `ts_us` the
+  * event's own micros (what `gap_us` subtracts).
+  */
+case class IntervalEvent(user_id: Long, ts: java.sql.Timestamp, t_us: Long,
+    ts_us: Long, is_view: Boolean, id: Long)
+
+/** Per-user interval-join buffers of (t_us, ts_us, id): views a
+  * not-yet-late purchase can still match, and purchases a
+  * not-yet-late view can still match.
+  */
+case class IntervalBuf(views: Seq[(Long, Long, Long)],
+    purchases: Seq[(Long, Long, Long)])
+
+case class IntervalPair(view_id: Long, purchase_id: Long, user_id: Long,
+    gap_us: Long)
+
 /** Structured Streaming equivalents of the reference's streaming apps
   * (SURVEY.md §2.1 #16-20). Each op is a pure stream→stream transform
   * (readStream → op → writeStream), so specs drive them with
@@ -422,25 +440,90 @@ object Streams {
 
   /** #18 — OrderWideApp/PaymentWideApp interval join
     * (OrderWideApp.java:84-90): views joined to the same user's
-    * purchases within the following 10 minutes. Stream-stream inner
-    * join; watermarks bound both buffers, the time-range condition
-    * bounds the state the engine retains per side.
+    * purchases within the following 10 minutes
+    * (`v_ts < p_ts <= v_ts + 10 min`), each side watermarked 10
+    * minutes behind its own newest event, the global watermark the
+    * minimum of the two.
+    *
+    * One keyed-state operator, not a stream-stream join: the two
+    * inputs are tagged and unioned ([[IntervalEvent]]) and one
+    * `flatMapGroupsWithState` keyed by `user_id` holds both sides'
+    * buffers — the [[asofJoinStream]] pattern. A native stream-stream
+    * join keeps four state stores per shuffle partition (each side's
+    * `keyToNumValues` and `keyWithIndexToValue`); this keeps one, so a
+    * micro-batch commits a quarter of the state-store files and plans
+    * no join. Each pair is emitted once, when its later side arrives.
+    *
+    * State bound: a view stays buffered while `v_ts + 10 min` is at or
+    * past the watermark, a purchase while `p_ts` is past it — after
+    * that any partner would be late and dropped by the engine. A key
+    * whose buffers are empty is removed by its event-time timeout, so
+    * state holds only the users with a view or purchase in the last
+    * 10 minutes plus the lateness (StreamingSpec reads that bound from
+    * the operator's own `numRowsTotal`).
+    *
+    * 100 TB path: state is hash-partitioned by user and each key's
+    * buffers are bounded by the watermark, not by history; a hot key
+    * costs O(its buffer) per arrival, as in the native join.
+    *
+    * Rows with a null `user_id`, `ts` or `ts_us` are dropped (the
+    * equi-join never matched them); rows at or behind the watermark
+    * are dropped by the engine and counted in the operator's
+    * `numRowsDroppedByWatermark`.
     */
   def intervalJoin(views: DataFrame, purchases: DataFrame): DataFrame = {
-    val v = views
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("v_ts"), col("ts_us").as("v_ts_us"))
-      .withWatermark("v_ts", "10 minutes")
-    val p = purchases
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"), col("ts_us").as("p_ts_us"))
-      .withWatermark("p_ts", "10 minutes")
-    v.join(p,
-      col("user_id") === col("p_user") &&
-        col("p_ts") > col("v_ts") &&
-        col("p_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"))
-      .select(col("view_id"), col("purchase_id"), col("user_id"),
-        (col("p_ts_us") - col("v_ts_us")).as("gap_us"))
+    val spark = views.sparkSession
+    import spark.implicits._
+    val TenMinUs = 10L * 60 * 1000 * 1000
+    def tagged(df: DataFrame, isView: Boolean): Dataset[IntervalEvent] = df
+      .where(col("user_id").isNotNull && col("ts").isNotNull &&
+        col("ts_us").isNotNull)
+      .select(col("user_id").cast("long"), col("ts"),
+        unix_micros(col("ts")).as("t_us"), col("ts_us").cast("long"),
+        lit(isView).as("is_view"), col("event_id").cast("long").as("id"))
+      .withWatermark("ts", "10 minutes")
+      .as[IntervalEvent]
+    tagged(views, isView = true).union(tagged(purchases, isView = false))
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[IntervalBuf, IntervalPair](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, it: Iterator[IntervalEvent],
+            state: GroupState[IntervalBuf]) =>
+          val wmMs = state.getCurrentWatermarkMs()
+          val wmUs = wmMs * 1000
+          val st = state.getOption.getOrElse(IntervalBuf(Nil, Nil))
+          val (newV, newP) = it.toVector.partition(_.is_view)
+          val arrivedV = newV.map(e => (e.t_us, e.ts_us, e.id))
+          val arrivedP = newP.map(e => (e.t_us, e.ts_us, e.id))
+          val allV = st.views ++ arrivedV
+          def pairs(vs: Seq[(Long, Long, Long)], ps: Seq[(Long, Long, Long)]) =
+            for {
+              (vt, vus, vid) <- vs
+              (pt, pus, pid) <- ps
+              if vt < pt && pt <= vt + TenMinUs
+            } yield IntervalPair(vid, pid, user, pus - vus)
+          // every new pair once: new purchases against all views, new
+          // views against the purchases buffered before this batch
+          val out = pairs(allV, arrivedP) ++ pairs(arrivedV, st.purchases)
+          val keptV = allV.filter(_._1 + TenMinUs >= wmUs)
+          val keptP = (st.purchases ++ arrivedP).filter(_._1 > wmUs)
+          if (keptV.isEmpty && keptP.isEmpty) {
+            if (state.exists) state.remove()
+          } else {
+            state.update(IntervalBuf(keptV, keptP))
+            // wake once the watermark has passed every buffered row:
+            // a view when wm_ms > (v + 10 min) / 1000, a purchase when
+            // wm_ms >= p / 1000 (both rounded for integral wm_ms)
+            val wake = math.max(
+              keptV.map(v => Math.floorDiv(v._1 + TenMinUs, 1000L))
+                .maxOption.getOrElse(0L),
+              keptP.map(p => Math.floorDiv(p._1 - 1, 1000L))
+                .maxOption.getOrElse(0L))
+            state.setTimeoutTimestamp(math.max(wake, wmMs + 1))
+          }
+          out.iterator
+      }
+      .toDF()
   }
 
   /** #19 — VisitorStatsApp (VisitorStatsApp.java:41-152): event-time

@@ -303,7 +303,7 @@ class GraftApiSpec extends SparkSpec {
     // the round-budget guard protects the ROUND LOOP — force the big
     // path (the r22 small-graph union-find has no rounds to exceed and
     // labels any diameter in one pass, asserted below)
-    spark.conf.set("spark.graft.cc.smallGraphEdges", "-1")
+    spark.conf.set("spark.graft.cc.smallGraphEdges", "1")
     try {
       // diameter 199 ≫ the round budget: minlabel fails LOUDLY…
       intercept[IllegalStateException] {
@@ -359,7 +359,7 @@ class GraftApiSpec extends SparkSpec {
   test("CC small-graph dial: single-partition rounds label identically (r22)") {
     import spark.implicits._
     // a graph rich enough to need several propagation rounds, plus an
-    // isolated pair; run with the dial forced OFF (threshold -1 keeps
+    // isolated pair; run with the dial forced OFF (threshold 1 keeps
     // the 32-partition round shape) and at its default (these edges
     // are far below it → single-partition rounds) — labels, sizes and
     // convergence must be identical, for BOTH algorithms
@@ -377,7 +377,7 @@ class GraftApiSpec extends SparkSpec {
     def run(alg: String) = Graft.connectedComponents(edges, "s", "d",
       algorithm = alg)
     val conf = spark.conf
-    conf.set("spark.graft.cc.smallGraphEdges", "-1")
+    conf.set("spark.graft.cc.smallGraphEdges", "1")
     val (bigMin, bigStar) = try (run("minlabel").collect().toSet,
       run("star").collect().toSet)
     finally conf.unset("spark.graft.cc.smallGraphEdges")
@@ -400,11 +400,48 @@ class GraftApiSpec extends SparkSpec {
     val sEdges = (Seq(("b", "c"), ("c", "d"), ("�", "𐐀"),
       ("𐐀", "zz")) ++ Seq.tabulate(30)(i => (s"v$i", s"v${i + 1}")))
       .toDF("s", "d")
-    conf.set("spark.graft.cc.smallGraphEdges", "-1")
+    conf.set("spark.graft.cc.smallGraphEdges", "1")
     val bigS = try Graft.connectedComponents(sEdges, "s", "d").collect().toSet
     finally conf.unset("spark.graft.cc.smallGraphEdges")
     assert(Graft.connectedComponents(sEdges, "s", "d").collect().toSet == bigS,
       "string-id small-dial diverged from the round loop")
+  }
+
+  test("CC small-graph dial: a malformed or non-positive threshold fails naming key and value") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("s", "d")
+    Seq("abc", "0", "-1", "5e5", "").foreach { v =>
+      spark.conf.set("spark.graft.cc.smallGraphEdges", v)
+      val err = try intercept[IllegalArgumentException] {
+        Graft.connectedComponents(edges, "s", "d")
+      } finally spark.conf.unset("spark.graft.cc.smallGraphEdges")
+      assert(err.getMessage.contains("spark.graft.cc.smallGraphEdges") &&
+        err.getMessage.contains(s"'$v'"), err.getMessage)
+    }
+  }
+
+  test("CC small-graph dial: -0.0 and 0.0 are one vertex on both sides of the threshold") {
+    import spark.implicits._
+    // the loop's joins and distinct normalize -0.0 to 0.0; the
+    // union-find must too, or the zeros split into two components
+    val edges = Seq((-0.0, 1.0), (0.0, 2.0), (2.0, 3.0), (-1.0, -0.0),
+      (5.0, 6.0)).toDF("s", "d")
+    def run(alg: String) = Graft.connectedComponents(edges, "s", "d",
+      algorithm = alg).as[(Double, Double, Long)].collect().toSet
+    val conf = spark.conf
+    conf.set("spark.graft.cc.smallGraphEdges", "1")
+    val (bigMin, bigStar) = try (run("minlabel"), run("star"))
+    finally conf.unset("spark.graft.cc.smallGraphEdges")
+    assert(bigMin == bigStar)
+    assert(run("minlabel") == bigMin, "minlabel small-dial split the zeros")
+    assert(run("star") == bigStar, "star small-dial split the zeros")
+    val floats = Seq((-0.0f, 1.0f), (0.0f, 2.0f)).toDF("s", "d")
+    def runF() = Graft.connectedComponents(floats, "s", "d")
+      .as[(Float, Float, Long)].collect().toSet
+    conf.set("spark.graft.cc.smallGraphEdges", "1")
+    val bigF = try runF() finally conf.unset("spark.graft.cc.smallGraphEdges")
+    assert(runF() == bigF, "float small-dial split the zeros")
+    assert(bigF.forall(_._3 == 3L), s"zeros not merged in the loop: $bigF")
   }
 
   test("cjkWords aggregated reproduces q_keyword_stats_cjk") {

@@ -385,6 +385,105 @@ class StreamingSpec extends SparkSpec {
       "multi-trigger stream interval join diverged from batch")
   }
 
+  test("stream_interval_join pairs a purchase delivered before its view; drops a late view") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val msV = MemoryStream[LogEvent]
+    val msP = MemoryStream[LogEvent]
+    val joined = Streams.intervalJoin(
+      msV.toDF().where(col("event_type") === "view"),
+      msP.toDF().where(col("event_type") === "purchase"))
+    val want = SparkEntry.queries("q_event_interval_join")(spark, sfTiny)
+      .select("view_id", "purchase_id", "gap_us")
+    // a pair strictly inside the interval, so its view is still ahead
+    // of the watermark that its early purchase moves
+    val pair = want.where(col("gap_us") < 10L * 60 * 1000 * 1000)
+      .orderBy("view_id", "purchase_id").head()
+    val evs = logEvents.filter(_.user_id >= 0).sortBy(e => (e.ts_us, e.event_id))
+    val view = evs.find(_.event_id == pair.getLong(0)).get
+    val buy = evs.find(_.event_id == pair.getLong(1)).get
+    val (before, rest) = evs.partition(_.ts_us < view.ts_us)
+    val after = rest.filterNot(_.event_id == buy.event_id)
+    // a copy of the earliest view under a fresh id: far behind the
+    // watermark once the whole log has been fed
+    val late = evs.find(_.event_type == "view").get
+      .copy(event_id = evs.map(_.event_id).max + 1)
+    val q = joined.writeStream.format("memory").queryName("ij_ooo")
+      .outputMode("append").start()
+    val dropped = try {
+      msV.addData(before); msP.addData(before :+ buy); q.processAllAvailable()
+      msV.addData(after); msP.addData(after); q.processAllAvailable()
+      msV.addData(Seq(late)); q.processAllAvailable()
+      q.recentProgress.flatMap(_.stateOperators)
+        .map(_.numRowsDroppedByWatermark).sum
+    } finally q.stop()
+    val got = spark.table("ij_ooo").select("view_id", "purchase_id", "gap_us")
+    assert(got.where(col("view_id") === view.event_id &&
+      col("purchase_id") === buy.event_id).count() == 1,
+      "the purchase delivered before its view was never paired")
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+      "out-of-order stream interval join diverged from batch")
+    assert(dropped == 1, s"expected the one late view dropped, got $dropped")
+  }
+
+  test("stream_interval_join state: one store per partition, bounded by the watermark tail") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val msV = MemoryStream[LogEvent]
+    val msP = MemoryStream[LogEvent]
+    val joined = Streams.intervalJoin(
+      msV.toDF().where(col("event_type") === "view"),
+      msP.toDF().where(col("event_type") === "purchase"))
+    // one event every 10 s for 4 hours; each user is active for 20
+    // consecutive events, so new keys keep arriving for the whole run
+    // while only the last 10 minutes plus the lateness may hold state
+    val stepUs = 10L * 1000 * 1000
+    val t0Us = 1704067200000000L
+    val evs = (0 until 1440).map { i =>
+      val tsUs = t0Us + i * stepUs
+      LogEvent(i.toLong, (i / 20).toLong,
+        if (i % 3 == 2) "purchase" else "view",
+        new java.sql.Timestamp(tsUs / 1000), tsUs, 1.0, null)
+    }
+    val TenMinUs = 10L * 60 * 1000 * 1000
+    val q = joined.writeStream.format("memory").queryName("ij_bound")
+      .outputMode("append").start()
+    // per trigger: (state rows, keys with a row in the watermark tail)
+    val perTrigger = try {
+      evs.grouped(120).toVector.zipWithIndex.map { case (chunk, i) =>
+        msV.addData(chunk); msP.addData(chunk); q.processAllAvailable()
+        val p = q.lastProgress
+        assert(p.stateOperators.length == 1,
+          s"expected one state operator, got ${p.stateOperators.length}")
+        val op = p.stateOperators.head
+        assert(op.numStateStoreInstances ==
+          spark.conf.get("spark.sql.shuffle.partitions").toLong,
+          s"expected one state store per partition, got " +
+            op.numStateStoreInstances)
+        val wmUs = java.time.Instant.parse(p.eventTime.get("watermark"))
+          .toEpochMilli * 1000
+        val tailKeys = evs.take((i + 1) * 120)
+          .filter(_.ts_us >= wmUs - TenMinUs).map(_.user_id).distinct.size
+        (op.numRowsTotal, tailKeys.toLong)
+      }
+    } finally q.stop()
+    perTrigger.zipWithIndex.foreach { case ((rows, tail), i) =>
+      assert(rows <= tail,
+        s"trigger $i: $rows state rows exceed the $tail keys in the tail")
+    }
+    val users = evs.map(_.user_id).distinct.size
+    assert(perTrigger.last._1 * 4 < users,
+      s"state kept ${perTrigger.last._1} of $users keys")
+    val want = for {
+      v <- evs if v.event_type == "view"
+      p <- evs if p.event_type == "purchase" && p.user_id == v.user_id &&
+        v.ts_us < p.ts_us && p.ts_us <= v.ts_us + TenMinUs
+    } yield (v.event_id, p.event_id, v.user_id, p.ts_us - v.ts_us)
+    val got = spark.table("ij_bound")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(got.sorted == want.sorted, "bounded-state run lost or added pairs")
+  }
+
   test("stream_visitor_stats: windowed multi-measure agg (complete mode)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
