@@ -18,8 +18,7 @@ object ProbeBanding {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.api.Graft
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.WordShingles.register(spark)
+    graft.api.Graft.install(spark)
 
     def occupancy(dir: String, bands: Int, rows: Int): (Long, Long, Double) = {
       spark.catalog.clearCache()

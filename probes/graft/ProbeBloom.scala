@@ -18,8 +18,7 @@ object ProbeBloom {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.WordShingles.register(spark)
-    graft.functions.BloomFunctions.register(spark)
+    graft.api.Graft.install(spark)
     val docs = Tables.documents(spark, dir)
     val isBench = pmod(col("doc_id"), lit(97L)) === 0
     def shingles(df: org.apache.spark.sql.DataFrame) = df

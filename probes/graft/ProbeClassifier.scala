@@ -27,7 +27,7 @@ object ProbeClassifier {
         println(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
     import graft.api.Graft
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val isRef = pmod(call_function("poly_hash", col("source")), lit(4L)) === 0

@@ -12,7 +12,7 @@ object ProbeClsPhases {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     import graft.operators.Text
     def t[A](tag: String)(body: => A): A = {
       val t0 = System.nanoTime(); val r = body

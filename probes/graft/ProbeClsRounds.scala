@@ -13,7 +13,7 @@ object ProbeClsRounds {
       .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     import graft.operators.Text
     def t[A](tag: String)(body: => A): A = {
       val t0 = System.nanoTime(); val r = body

@@ -26,7 +26,7 @@ object ProbeDupIncPhases {
       }
     }
     // component phases (base store now memoized)
-    graft.functions.WordShingles.register(spark)
+    graft.api.Graft.install(spark)
     (1 to 2).foreach { rep =>
       println(s"=== phases rep $rep ===")
       spark.catalog.clearCache()

@@ -8,7 +8,7 @@ object ProbeFxGrad {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClassifierFx.register(spark)
+    graft.api.Graft.install(spark)
     val w = Array.tabulate(257)(i => math.sin(i.toDouble) / 8.0 - 0.01)
     val df = spark.sql(
       """SELECT * FROM VALUES

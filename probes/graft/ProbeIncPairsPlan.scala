@@ -11,7 +11,7 @@ object ProbeIncPairsPlan {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.WordShingleHashes.register(spark)
+    graft.api.Graft.install(spark)
     def t[A](tag: String)(body: => A): A = {
       val t0 = System.nanoTime(); val r = body
       println(f"[incpairs] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r

@@ -32,7 +32,7 @@ object ProbeIvfMass {
         transform(sequence(lit(0), lit(dim - 1)),
           i => pmod(xxhash64(col("id") * lit(17) + i), lit(1000)).cast("double") / 500.0 - lit(1.0)).as("qv"))
       .localCheckpoint(true)
-    graft.functions.CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       call_function("cosine_sim", a, b)
     val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))

@@ -41,7 +41,7 @@ object ProbeIvfSq {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     import graft.api.Graft
 
     val Dim = 64

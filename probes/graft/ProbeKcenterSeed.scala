@@ -32,7 +32,7 @@ object ProbeKcenterSeed {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     import graft.api.Graft
 
     val Dim = 64

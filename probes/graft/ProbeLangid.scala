@@ -24,8 +24,7 @@ object ProbeLangid {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.CharNgramHashes.register(spark)
-    graft.functions.CharNgramProfile.register(spark)
+    graft.api.Graft.install(spark)
     val docs = Tables.documents(spark, sf)
       .withColumn("norm", operators.Dedup.contentNormOf(col("text")))
     println(s"docs: ${docs.count()}")

@@ -26,7 +26,7 @@ object ProbeMergePhases {
       r
     }
     import graft.operators.Dedup
-    graft.functions.WordShingleHashes.register(spark)
+    graft.api.Graft.install(spark)
     // warm everything once (base memo fit, code paths)
     t("warmup full #69") {
       SparkEntry.queries("q_dup_clusters_incremental")(spark, dir)

@@ -46,8 +46,7 @@ object ProbeOpqRotation {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     import graft.api.Graft
     import spark.implicits._
 

@@ -43,8 +43,7 @@ object ProbeRecallScale {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     import graft.api.Graft
 
     val Dim = 64; val K = 64

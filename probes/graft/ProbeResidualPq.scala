@@ -24,7 +24,7 @@ object ProbeResidualPq {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val Dim = 64; val M = 8; val K = 64
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -32,7 +32,7 @@ object ProbeScale256 {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
 
     def time(tag: String)(body: => Unit): Double = {
       var best = Double.MaxValue

@@ -24,7 +24,7 @@ object ProbeSqQuantBounds {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     import graft.api.Graft
 
     val Dim = 64

@@ -22,7 +22,7 @@ object ProbeSqRecall {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     import graft.api.Graft
 
     val Dim = 64

@@ -7,8 +7,7 @@ object ProbeUsable {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.UsableVec.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     val dir = "/root/testdata/sf0.1"
     def time(tag: String)(b: => Unit): Unit = {
       (1 to 3).foreach { _ =>

@@ -2,40 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSimilarity, DotProduct, MinHashSig, SimHash64, WordShingleHashes, WordShingles}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.SqlFunctions
 
 /** Library entry point for `spark.sql.extensions=graft.GraftExtensions`:
-  * installs graft's custom Catalyst expressions into every session built
-  * with the config, so SQL users get `cosine_sim` / `word_shingles`
-  * without touching the Scala API. The operator objects also register
-  * on demand for sessions created without the extension.
+  * injects every row of [[SqlFunctions.table]] into each session built
+  * with the config, so SQL users get all of graft's functions without
+  * touching the Scala API. A running session gets the same functions
+  * from `graft.api.Graft.install(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => WordShingles.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingle_hashes"),
-      new ExpressionInfo(classOf[WordShingleHashes].getName, "word_shingle_hashes"),
-      (exprs: Seq[Expression]) => WordShingleHashes.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSig.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64.build(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((name, cls, build) <- SqlFunctions.table)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
 }

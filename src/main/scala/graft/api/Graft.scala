@@ -1,8 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.SqlFunctions.call
 
 /** The user-facing DataFrame-in / DataFrame-out surface of the engine.
   *
@@ -19,6 +20,14 @@ import org.apache.spark.sql.functions._
   * AQE join selection, whole-stage codegen all apply unchanged).
   */
 object Graft {
+
+  /** Registers graft's SQL functions (`cosine_sim`, `word_shingles`,
+    * … — the rows of [[graft.functions.SqlFunctions.table]]) into a
+    * running session, for SQL text. Idempotent. Sessions built with
+    * `spark.sql.extensions=graft.GraftExtensions` have them already;
+    * the DataFrame methods below need neither.
+    */
+  def install(spark: SparkSession): Unit = graft.functions.SqlFunctions.install(spark)
 
   /** Exact content dedup: one row per input row with its content
     * fingerprint, canonical id (min id per fingerprint group), group
@@ -63,10 +72,9 @@ object Graft {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.8, dfCap: Int = Int.MaxValue): DataFrame = {
-    graft.functions.WordShingles.register(docs.sparkSession)
     val sets = docs
       .select(col(idCol).as("id"),
-        expr(s"word_shingles($textCol, $n)").as("shingles"))
+        call("word_shingles", col(textCol), lit(n)).as("shingles"))
       .persist()
     var staged: List[DataFrame] = List(sets)
     try {
@@ -194,11 +202,9 @@ object Graft {
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
-    val quoted = "`" + textCol.replace("`", "``") + "`"
     hammingPairs(
-      docs.where(expr(s"exists(split($quoted, ' '), t -> t <> '')"))
-        .select(col(idCol), expr(s"simhash64($quoted)").as("_sig")),
+      docs.where(exists(split(col(textCol), " "), t => t =!= ""))
+        .select(col(idCol), call("simhash64", col(textCol)).as("_sig")),
       idCol, "_sig", maxDist)
   }
 
@@ -219,7 +225,6 @@ object Graft {
       sampleMod: Long = 10L): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(sampleMod > 0, s"sampleMod must be positive, got $sampleMod")
-    graft.functions.CosineSimilarity.register(embeddings.sparkSession)
     val e = embeddings
       .select(col(idCol).as("_id"), col(labelCol).as("_label"),
         col(vecCol).cast("array<double>").as("_v"))
@@ -233,7 +238,7 @@ object Graft {
     val w = Window.partitionBy("_qid").orderBy(col("_cos").desc, col("_id"))
     e.crossJoin(broadcast(q))
       .where(col("_id") =!= col("_qid"))
-      .withColumn("_cos", call_function("cosine_sim", col("_qv"), col("_v")))
+      .withColumn("_cos", call("cosine_sim", col("_qv"), col("_v")))
       .withColumn("_rank", row_number().over(w))
       .where(col("_rank") <= k)
       .groupBy(col("_qlabel").as("label"))
@@ -266,10 +271,9 @@ object Graft {
     // fused shingle+hash generator (r21): same longs as
     // explode(word_shingles) -> xxhash64, one codegen'd pass, no
     // per-shingle string column through the generator
-    graft.functions.WordShingleHashes.register(docs.sparkSession)
     docs
       .select(col(idCol).as("id"),
-        explode(expr(s"word_shingle_hashes($textCol, $n)")).as("shingle"))
+        explode(call("word_shingle_hashes", col(textCol), lit(n))).as("shingle"))
   }
 
   /** Writes a [[shingleIndex]] frame as a parquet table BUCKETED by
@@ -425,7 +429,6 @@ object Graft {
       centVecCol: String, maxCentroids: Int, caller: String,
       withResidual: Boolean): DataFrame = {
     require(maxCentroids > 0, s"$caller: maxCentroids must be positive")
-    graft.functions.CosineSimilarity.register(embeddings.sparkSession)
     val e = embeddings.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("vec"))
     val c = centroids.select(col(centIdCol).as("cent_id"),
@@ -459,7 +462,7 @@ object Graft {
       row2long(r, 0, caller, "centroid id")).toSeq)
     val best = array_max(transform(
       sequence(lit(0), lit(centRows.length - 1)), i =>
-        struct(call_function("cosine_sim",
+        struct(call("cosine_sim",
             element_at(vecsLit, i + lit(1)), col("vec")).as("c"),
           (-element_at(idsLit, i + lit(1))).as("t"),
           i.as("i"))))
@@ -581,14 +584,13 @@ object Graft {
         "passes (the kcenterCoreset cap rationale); for thousands of " +
         "cells use seedMode = parallel (k-means||, constant passes)")
     val spark = embeddings.sparkSession
-    graft.functions.CosineSimilarity.register(spark)
     import spark.implicits._
     val e = embeddings.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("vec"))
       .persist()
     try {
       val usable = e
-        .where(call_function("cosine_sim", col("vec"), col("vec")).isNotNull)
+        .where(call("cosine_sim", col("vec"), col("vec")).isNotNull)
       // kcenterPicks reads ids as longs for its deterministic
       // tie-break (r19 review: the spread draw accepts any id type,
       // so the kcenter flavor must refuse non-integral ids loudly
@@ -652,7 +654,7 @@ object Graft {
         val best = array_max(filter(
           zip_with(typedLit(cents.map(_._2)), typedLit(cents.map(_._1)),
             (cv, cid) => struct(
-              call_function("cosine_sim", cv, col("vec")).as("c"),
+              call("cosine_sim", cv, col("vec")).as("c"),
               (-cid).as("t"))),
           s => s.getField("c").isNotNull))
         // every row votes for itself, null-id rows included: ids are
@@ -755,7 +757,7 @@ object Graft {
     // vote in seeding — the kcenter null-exclusion rule; they still
     // vote in the Lloyd rounds
     var p = e.where(col("id") =!= seed._1)
-      .withColumn("dmin", lit(1.0) - call_function("cosine_sim",
+      .withColumn("dmin", lit(1.0) - call("cosine_sim",
         col("vec"), array(seed._2.map(lit): _*)))
       .where(col("dmin").isNotNull)
       .persist()
@@ -794,7 +796,7 @@ object Graft {
               // corpus-sized shuffles
               val dNew = lit(1.0) - array_max(filter(
                 transform(typedLit(nc.map(_._2)),
-                  cv => call_function("cosine_sim", cv, col("vec"))),
+                  cv => call("cosine_sim", cv, col("vec"))),
                 c => c.isNotNull))
               val p2 = p
                 .withColumn("dmin", least(col("dmin"), dNew))
@@ -999,7 +1001,6 @@ object Graft {
       excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    graft.functions.CosineSimilarity.register(index.sparkSession)
     val c = centroids.select(col(centIdCol).as("cent_id"),
       col(centVecCol).cast("array<double>").as("cv"))
     val q = queries.select(col(qIdCol).as("q_id"),
@@ -1007,7 +1008,7 @@ object Graft {
     val wProbe = Window.partitionBy("q_id")
       .orderBy(col("ccos").desc, col("cent_id"))
     val probes = q.crossJoin(broadcast(c))
-      .withColumn("ccos", call_function("cosine_sim", col("cv"), col("qv")))
+      .withColumn("ccos", call("cosine_sim", col("cv"), col("qv")))
       .withColumn("crank", row_number().over(wProbe))
       .where(col("crank") <= nprobe)
       .select(col("q_id"), col("qv"), col("cent_id").as("cell"))
@@ -1016,7 +1017,7 @@ object Graft {
     val filtered =
       if (excludeSelf) cand.where(col("id") =!= col("q_id")) else cand
     filtered
-      .withColumn("cos", call_function("cosine_sim", col("qv"), col("vec")))
+      .withColumn("cos", call("cosine_sim", col("qv"), col("vec")))
       .withColumn("rank", row_number().over(wTop))
       .where(col("rank") <= k)
       .select("q_id", "rank", "id", "cos")
@@ -1044,10 +1045,9 @@ object Graft {
         "plan literals; for thousands of representatives use " +
         "kmeansCentroids (one pass per Lloyd round, any k) or pass a " +
         "larger maxK to accept the cost explicitly")
-    graft.functions.CosineSimilarity.register(embeddings.sparkSession)
     val e = embeddings.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("v"))
-      .where(call_function("cosine_sim", col("v"), col("v")).isNotNull)
+      .where(call("cosine_sim", col("v"), col("v")).isNotNull)
     graft.operators.Similarity.kcenterCore(e, k)
   }
 
@@ -1091,12 +1091,11 @@ object Graft {
   def winnowIndex(docs: DataFrame, idCol: String, textCol: String,
       k: Int = graft.operators.Dedup.WinnowK,
       w: Int = graft.operators.Dedup.WinnowW): DataFrame = {
-    graft.functions.WinnowFps.register(docs.sparkSession)
     docs
       .withColumn("norm",
         graft.operators.Dedup.contentNormOf(col(textCol)))
       .select(col(idCol).as("id"),
-        explode(expr(s"winnow_fps(norm, $k, $w)")).as("shingle"))
+        explode(call("winnow_fps", col("norm"), lit(k), lit(w))).as("shingle"))
   }
 
   /** MinHash + banded-LSH near-duplicate pairs over ANY id+text frame
@@ -1130,12 +1129,9 @@ object Graft {
       tau: Double = graft.operators.Dedup.JaccardTau): DataFrame = {
     require(bands > 0 && rowsPerBand > 0,
       s"banding dials must be positive, got bands=$bands rows=$rowsPerBand")
-    val spark = docs.sparkSession
-    graft.functions.WordShingles.register(spark)
-    graft.functions.MinHashSig.register(spark)
     val sets = docs
       .select(col(idCol).as("doc_id"), col(textCol).as("_mh_text"))
-      .select(col("doc_id"), expr("word_shingles(_mh_text, 3)").as("shingles"))
+      .select(col("doc_id"), call("word_shingles", col("_mh_text"), lit(3)).as("shingles"))
       .withColumn("n_shingles", size(col("shingles")).cast("long"))
       .persist()
     graft.operators.Dedup.minhashLshPipelineFrame(sets, "minhash_sig",
@@ -1259,7 +1255,6 @@ object Graft {
     require(k > 0, s"k must be positive, got $k")
     require(iters >= 0, s"iters must be non-negative, got $iters")
     val spark = embeddings.sparkSession
-    graft.functions.DotProduct.register(spark)
     import spark.implicits._
     val sub = dim / m
     val e0 = usablePqVectors(embeddings, idCol, vecCol, dim)
@@ -1276,8 +1271,8 @@ object Graft {
           .toDF("s", "code", "cw")
         val means = ev.join(broadcast(cb), "s")
           .withColumn("key",
-            call_function("dot_product", col("cw"), col("cw")) -
-              lit(2.0) * call_function("dot_product", col("sv"), col("cw")))
+            call("dot_product", col("cw"), col("cw")) -
+              lit(2.0) * call("dot_product", col("sv"), col("cw")))
           .groupBy("id", "s")
           .agg(first(col("sv")).as("sv"),
             min_by(col("code"), struct(col("key"), col("code"))).as("code"))
@@ -1322,7 +1317,6 @@ object Graft {
   def pqEncode(embeddings: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.DotProduct.register(spark)
     val (m, sub) = pqShape(codebooks)
     val cbRows = codebooks.select(col("subspace").cast("int").as("s"),
       col("code"), col("cw").cast("array<double>").as("cw")).collect()
@@ -1343,8 +1337,8 @@ object Graft {
       array_min(zip_with(
         element_at(cwLit, s + lit(1)), element_at(codeLit, s + lit(1)),
         (cw, code) => struct(
-          (call_function("dot_product", cw, cw) -
-            lit(2.0) * call_function("dot_product", sv, cw)).as("k"),
+          (call("dot_product", cw, cw) -
+            lit(2.0) * call("dot_product", sv, cw)).as("k"),
           code.as("t")))).getField("t")
     })
     usablePqVectors(embeddings, idCol, vecCol, m * sub)
@@ -1371,14 +1365,12 @@ object Graft {
       qIdCol: String, qVecCol: String, k: Int,
       excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val spark = codes.sparkSession
-    graft.functions.DotProduct.register(spark)
     val (m, sub) = pqShape(codebooks)
     val q = queries.select(col(qIdCol).as("q_id"),
       col(qVecCol).cast("array<double>").as("qv"))
     val tab = q.crossJoin(codebooks)
       .select(col("q_id"), col("subspace").as("s"), col("code"),
-        call_function("dot_product",
+        call("dot_product",
           slice(col("qv"), col("subspace") * sub + 1, lit(sub)),
           col("cw")).as("partial"))
     val exploded = codes.select(col("id"),
@@ -1548,9 +1540,6 @@ object Graft {
           s"fit_residual in {${flavors.mkString(", ")}} — the ADC table " +
           "would be built from the wrong quantizer; match the flavor")
     }
-    val spark = index.sparkSession
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
     val (_, sub) = pqShape(codebooks)
     val q = queries.select(col(qIdCol).as("q_id"),
       col(qVecCol).cast("array<double>").as("qv"))
@@ -1559,16 +1548,16 @@ object Graft {
     val wProbe = Window.partitionBy("q_id")
       .orderBy(col("ccos").desc, col("cent_id"))
     val probes = q.crossJoin(broadcast(c))
-      .withColumn("ccos", call_function("cosine_sim", col("cv"), col("qv")))
+      .withColumn("ccos", call("cosine_sim", col("cv"), col("qv")))
       .withColumn("crank", row_number().over(wProbe))
       .where(col("crank") <= nprobe)
       .select(col("q_id") +: col("cent_id").as("cell") +:
         (if (residual)
-          Seq(call_function("dot_product", col("qv"), col("cv")).as("cdot"))
+          Seq(call("dot_product", col("qv"), col("cv")).as("cdot"))
         else Seq.empty): _*)
     val tab = q.crossJoin(codebooks)
       .select(col("q_id"), col("subspace").as("s"), col("code"),
-        call_function("dot_product",
+        call("dot_product",
           slice(col("qv"), col("subspace") * sub + 1, lit(sub)),
           col("cw")).as("partial"))
     val wTop = Window.partitionBy("q_id").orderBy(col("adc").desc, col("id"))
@@ -1641,8 +1630,6 @@ object Graft {
       idCol: String, vecCol: String, queries: DataFrame, qIdCol: String,
       qVecCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val spark = candidates.sparkSession
-    graft.functions.DotProduct.register(spark)
     val q = queries.select(col(qIdCol).as("q_id"),
       col(qVecCol).cast("array<double>").as("qv"))
     // dedup defensively: a unioned/concatenated shortlist with repeated
@@ -1656,7 +1643,7 @@ object Graft {
     val wTop = Window.partitionBy("q_id").orderBy(col("dot").desc, col("id"))
     corpus.join(broadcast(cand), "id")
       .withColumn("dot",
-        call_function("dot_product", col("qv"), col("_graft_rv")))
+        call("dot_product", col("qv"), col("_graft_rv")))
       .withColumn("rank", row_number().over(wTop))
       .where(col("rank") <= k)
       .select("q_id", "rank", "id", "dot")
@@ -1807,8 +1794,6 @@ object Graft {
       qIdCol: String, qVecCol: String, k: Int,
       excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val spark = codes.sparkSession
-    graft.functions.DotProduct.register(spark)
     val q = queries.select(col(qIdCol).as("q_id"),
       col(qVecCol).cast("array<double>").as("qv"))
     val wTop = Window.partitionBy("q_id").orderBy(col("score").desc, col("id"))
@@ -1824,7 +1809,7 @@ object Graft {
       .crossJoin(broadcast(q))
       .where(if (excludeSelf) col("id") =!= col("q_id") else lit(true))
       .withColumn("score",
-        call_function("dot_product", col("qv"), col("recon")))
+        call("dot_product", col("qv"), col("recon")))
       .withColumn("rank", row_number().over(wTop))
       .where(col("rank") <= k)
       .select("q_id", "rank", "id", "score")
@@ -2061,9 +2046,6 @@ object Graft {
           "reconstruction would decode against the wrong distribution; " +
           "match the fit flavor")
     }
-    val spark = index.sparkSession
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
     val q = queries.select(col(qIdCol).as("q_id"),
       col(qVecCol).cast("array<double>").as("qv"))
     val c = centroids.select(col(centIdCol).as("cent_id"),
@@ -2071,7 +2053,7 @@ object Graft {
     val wProbe = Window.partitionBy("q_id")
       .orderBy(col("ccos").desc, col("cent_id"))
     val probes = q.crossJoin(broadcast(c))
-      .withColumn("ccos", call_function("cosine_sim", col("cv"), col("qv")))
+      .withColumn("ccos", call("cosine_sim", col("cv"), col("qv")))
       .withColumn("crank", row_number().over(wProbe))
       .where(col("crank") <= nprobe)
       .select(col("q_id"), col("qv"), col("cent_id").as("cell"))
@@ -2145,7 +2127,7 @@ object Graft {
       .join(broadcast(probes), "cell")
       .where(if (excludeSelf) col("id") =!= col("q_id") else lit(true))
       .withColumn("score",
-        call_function("dot_product", col("qv"), col("vhat")))
+        call("dot_product", col("qv"), col("vhat")))
       .withColumn("rank", row_number().over(wTop))
       .where(col("rank") <= k)
       .select("q_id", "rank", "id", "score")
@@ -2157,7 +2139,7 @@ object Graft {
     * `depth` hash rows are distinct functions of the term.
     */
   private def cmsBucket(d: Column, term: Column, width: Int): Column =
-    pmod(call_function("poly_hash",
+    pmod(call("poly_hash",
       concat(d.cast("string"), lit("|"), term)), lit(width.toLong))
 
   /** SIZE the Count-Min dials from the accuracy contract — the
@@ -2222,7 +2204,6 @@ object Graft {
   def cmsSketch(terms: DataFrame, termCol: String, depth: Int,
       width: Int): DataFrame = {
     require(depth > 0 && width > 0, s"bad CMS dials: $depth x $width")
-    graft.functions.PolyHashStr.register(terms.sparkSession)
     terms.select(col(termCol).as("_graft_t"),
         explode(sequence(lit(0), lit(depth - 1))).as("d"))
       .where(col("_graft_t").isNotNull)
@@ -2250,7 +2231,6 @@ object Graft {
   def cmsEstimate(sketch: DataFrame, terms: DataFrame, termCol: String,
       depth: Int, width: Int,
       maxBroadcastCounters: Long = 1L << 24): DataFrame = {
-    graft.functions.PolyHashStr.register(terms.sparkSession)
     // dial agreement with the build (markers present on any
     // cmsSketch-built frame; the sketch is depth×width rows, so the
     // distinct read is driver-cheap). Hand-built frames without the
@@ -2335,7 +2315,6 @@ object Graft {
       centIdCol: String, centVecCol: String,
       batch: DataFrame, idCol: String, vecCol: String,
       tau: Double): DataFrame = {
-    graft.functions.CosineSimilarity.register(batch.sparkSession)
     val bIdx = ivfIndex(batch, idCol, vecCol, centroids, centIdCol,
       centVecCol)
     val nw = bIdx.select(col("cell"), col("id").as("new_id"),
@@ -2343,7 +2322,7 @@ object Graft {
     def twins(old: DataFrame, pred: Column): DataFrame = nw
       .join(old, Seq("cell"))
       .where(pred)
-      .withColumn("cos", call_function("cosine_sim", col("nv"), col("ov")))
+      .withColumn("cos", call("cosine_sim", col("nv"), col("ov")))
       .where(col("cos") >= tau)
       .select(col("new_id"), col("cell"), col("cos"))
     val vsStore = twins(index.select(col("cell"), col("id").as("old_id"),

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -86,21 +85,6 @@ object CharNgramHashes {
     new GenericArrayData(out)
   }
 
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): CharNgramHashes = exprs match {
-    case Seq(a, b) => CharNgramHashes(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"char_ngram_hashes expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the [[WinnowFps.register]]
-    * pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("char_ngram_hashes")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CharNgramHashes].getName, "char_ngram_hashes"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 }

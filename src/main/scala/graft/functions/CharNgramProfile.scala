@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -109,23 +107,5 @@ object CharNgramProfile {
       r += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): CharNgramProfile = exprs match {
-    case Seq(a, b, c) => CharNgramProfile(a, b, c)
-    case _ => throw new IllegalArgumentException(
-      s"char_ngram_profile expects exactly 3 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the [[WinnowFps.register]]
-    * pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("char_ngram_profile")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CharNgramProfile].getName, "char_ngram_profile"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.TernaryLike
@@ -26,6 +25,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * order is the left-associative order the Column expression built.
   * FunctionsSpec pins both against the unfused HOF pipelines
   * element-for-element, including empty arrays and null propagation.
+  *
+  * The bit-identical claim holds for feature indices in `[0, len(w))`.
+  * Outside that range the HOF's `element_at` gave null (or, for a
+  * negative index, counted from the end); here the task fails with an
+  * `ArrayIndexOutOfBoundsException` naming the index and the weights'
+  * length, so a feature/weights dimension mismatch cannot score
+  * silently.
   */
 object ClassifierFx {
 
@@ -57,29 +63,8 @@ object ClassifierFx {
     if (s == null) null else java.lang.Double.valueOf(s.longValue().toDouble / 1000000.0)
   }
 
-  /** Idempotent session registration of both functions. */
-  def register(spark: SparkSession): Unit = {
-    val dotId = FunctionIdentifier("fx_dot")
-    if (!spark.sessionState.functionRegistry.functionExists(dotId))
-      spark.sessionState.functionRegistry.registerFunction(
-        dotId,
-        new ExpressionInfo(classOf[SparseFxDot].getName, "fx_dot"),
-        (exprs: Seq[Expression]) => exprs match {
-          case Seq(a, b) => SparseFxDot(a, b)
-          case _ => throw new IllegalArgumentException(
-            s"fx_dot expects exactly 2 arguments, got ${exprs.length}")
-        })
-    val gradId = FunctionIdentifier("fx_grad")
-    if (!spark.sessionState.functionRegistry.functionExists(gradId))
-      spark.sessionState.functionRegistry.registerFunction(
-        gradId,
-        new ExpressionInfo(classOf[FxGradAgg].getName, "fx_grad"),
-        (exprs: Seq[Expression]) => exprs match {
-          case Seq(a, b, c) => FxGradAgg(a, b, c)
-          case _ => throw new IllegalArgumentException(
-            s"fx_grad expects exactly 3 arguments, got ${exprs.length}")
-        })
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 
   private[functions] def checkFvType(dt: DataType): Boolean = dt match {
     case ArrayType(st: StructType, _) =>

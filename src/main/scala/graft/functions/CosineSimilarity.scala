@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -97,21 +96,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): CosineSimilarity = exprs match {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"cosine_sim expects exactly 2 arguments, got ${exprs.length}")
-  }
 
-  /** Registers `cosine_sim(a, b)` so operators can use it via expr();
-    * guarded so repeat calls don't emit re-registration WARNs. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("cosine_sim")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 }

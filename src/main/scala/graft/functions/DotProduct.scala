@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -80,21 +78,4 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): DotProduct = exprs match {
-    case Seq(a, b) => DotProduct(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"dot_product expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Registers `dot_product(a, b)` (idempotent, mirrors CosineSimilarity);
-    * guarded so repeat calls don't emit re-registration WARNs. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("dot_product")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -209,22 +207,5 @@ object GopherRepMeasures {
     }
     out(idx) = pass
     new GenericInternalRow(out)
-  }
-
-  def build(exprs: Seq[Expression]): GopherRepMeasures = exprs match {
-    case Seq(a) => GopherRepMeasures(a)
-    case _ => throw new IllegalArgumentException(
-      s"gopher_rep_measures expects exactly 1 argument, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the WordShingles pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("gopher_rep_measures")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[GopherRepMeasures].getName,
-          "gopher_rep_measures"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -84,21 +82,5 @@ object MinHashPolySig {
     }
     if (!sawOne) return null
     new GenericArrayData(mins)
-  }
-
-  def build(exprs: Seq[Expression]): MinHashPolySig = exprs match {
-    case Seq(a, b) => MinHashPolySig(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"minhash_poly_sig expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the MinHashSig pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("minhash_poly_sig")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[MinHashPolySig].getName, "minhash_poly_sig"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -93,21 +92,6 @@ object MinHashSig {
     new GenericArrayData(mins)
   }
 
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): MinHashSig = exprs match {
-    case Seq(a, b) => MinHashSig(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"minhash_sig expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (mirrors CosineSimilarity.register);
-    * guarded so repeat calls don't emit re-registration WARNs. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("minhash_sig")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StructType}
@@ -79,23 +77,5 @@ object OopDistance {
       i += 1
     }
     sum
-  }
-
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): OopDistance = exprs match {
-    case Seq(a, b, c) => OopDistance(a, b, c)
-    case _ => throw new IllegalArgumentException(
-      s"oop_distance expects exactly 3 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the [[WinnowFps.register]]
-    * pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("oop_distance")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[OopDistance].getName, "oop_distance"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

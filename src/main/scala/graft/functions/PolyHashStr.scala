@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,21 +35,4 @@ case class PolyHashStr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): PolyHashStr =
     copy(child = newChild)
-}
-
-object PolyHashStr {
-  /** Idempotent session registration (the [[WinnowFps.register]]
-    * pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("poly_hash")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[PolyHashStr].getName, "poly_hash"),
-        {
-          case Seq(e) => PolyHashStr(e)
-          case exprs => throw new IllegalArgumentException(
-            s"poly_hash expects exactly 1 argument, got ${exprs.length}")
-        })
-  }
 }

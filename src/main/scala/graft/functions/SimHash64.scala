@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -81,21 +80,6 @@ object SimHash64 {
     sig
   }
 
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): SimHash64 = exprs match {
-    case Seq(a) => SimHash64(a)
-    case _ => throw new IllegalArgumentException(
-      s"simhash64 expects exactly 1 argument, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (mirrors CosineSimilarity.register);
-    * guarded so repeat calls don't emit re-registration WARNs. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("simhash64")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 }

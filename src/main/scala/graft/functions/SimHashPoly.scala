@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -92,22 +90,5 @@ object SimHashPoly {
       j += 1
     }
     sig
-  }
-
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): SimHashPoly = exprs match {
-    case Seq(a) => SimHashPoly(a)
-    case _ => throw new IllegalArgumentException(
-      s"simhash_poly expects exactly 1 argument, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the SimHash64 pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("simhash_poly")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SimHashPoly].getName, "simhash_poly"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

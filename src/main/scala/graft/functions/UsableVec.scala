@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType}
@@ -58,22 +56,5 @@ object UsableVec {
     // squares cannot reach -inf)
     acc > 0 && !java.lang.Double.isNaN(acc) &&
       acc != java.lang.Double.POSITIVE_INFINITY
-  }
-
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): UsableVec = exprs match {
-    case Seq(a, b) => UsableVec(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"usable_vec expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (the MinHashSig pattern). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("usable_vec")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[UsableVec].getName, "usable_vec"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

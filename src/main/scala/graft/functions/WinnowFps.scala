@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -122,21 +121,6 @@ object WinnowFps {
     new GenericArrayData(out)
   }
 
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): WinnowFps = exprs match {
-    case Seq(a, b, c) => WinnowFps(a, b, c)
-    case _ => throw new IllegalArgumentException(
-      s"winnow_fps expects exactly 3 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (mirrors CosineSimilarity.register);
-    * guarded so repeat calls don't emit re-registration WARNs. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("winnow_fps")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -100,22 +98,5 @@ object WordShingleHashes {
       k += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): WordShingleHashes = exprs match {
-    case Seq(a, b) => WordShingleHashes(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"word_shingle_hashes expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (mirrors WordShingles.register). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("word_shingle_hashes")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WordShingleHashes].getName, "word_shingle_hashes"),
-        (exprs: Seq[Expression]) => build(exprs))
   }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -79,24 +78,6 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
-  /** Builder with a clean arity error instead of an index crash. */
-  def build(exprs: Seq[Expression]): WordShingles = exprs match {
-    case Seq(a, b) => WordShingles(a, b)
-    case _ => throw new IllegalArgumentException(
-      s"word_shingles expects exactly 2 arguments, got ${exprs.length}")
-  }
-
-  /** Idempotent session registration (mirrors CosineSimilarity.register).
-    * The functionExists guard makes repeat calls a true no-op — re-registering
-    * logs a "replaced a previously registered function" WARN per call, which
-    * at 73 bench queries floods the driver's log-tail capture window.
-    */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("word_shingles")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-        (exprs: Seq[Expression]) => build(exprs))
-  }
+  // kept because perfbench/scala/Probes.scala registers through this name
+  def register(spark: SparkSession): Unit = SqlFunctions.install(spark)
 }

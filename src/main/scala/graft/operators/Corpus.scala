@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.SqlFunctions.call
 
 /** Corpus-level operators a training-data pipeline needs beyond
   * dedup/similarity (SURVEY.md §2.3 extension): deterministic
@@ -506,12 +507,11 @@ object Corpus {
     * sliding bigrams instead).
     */
   def qNgramStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val w = Window.partitionBy("source")
       .orderBy(col("cnt").desc, col("bigram"))
     Tables.documents(spark, dir)
       .select(col("source"),
-        explode(expr("word_shingles(text, 2)")).as("bigram"))
+        explode(call("word_shingles", col("text"), lit(2))).as("bigram"))
       .groupBy("source", "bigram").agg(count(lit(1)).as("cnt"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .where(col("rk") <= 10)
@@ -553,12 +553,11 @@ object Corpus {
     */
   private[graft] def contaminated(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int, minOverlap: Long): DataFrame = {
-    graft.functions.WordShingleHashes.register(corpus.sparkSession)
     val sh = corpus
       .select(col(idCol).as("id"),
-        explode(expr(s"word_shingle_hashes($textCol, $n)")).as("shingle"))
+        explode(call("word_shingle_hashes", col(textCol), lit(n))).as("shingle"))
     val vocab = benchmark
-      .select(explode(expr(s"word_shingle_hashes($textCol, $n)")).as("shingle"))
+      .select(explode(call("word_shingle_hashes", col(textCol), lit(n))).as("shingle"))
       .distinct()
     sh.join(broadcast(vocab), Seq("shingle"))
       // word_shingles dedupes within a doc, so count(*) IS the distinct
@@ -616,23 +615,21 @@ object Corpus {
         s"session caps ($maxItems/$maxBits); raise " +
         "spark.sql.optimizer.runtime.bloomFilter.maxNumItems / .maxNumBits " +
         "on the SparkSession before sizing for a web-scale benchmark")
-    graft.functions.WordShingleHashes.register(spark)
-    graft.functions.BloomFunctions.register(spark)
     val sh = corpus
       .select(col(idCol).as("id"),
-        explode(expr(s"word_shingle_hashes($textCol, $n)")).as("shingle"))
+        explode(call("word_shingle_hashes", col(textCol), lit(n))).as("shingle"))
     // materialized once (localCheckpoint, the connectedComponents
     // discipline): the bloom build is an eager action over this frame
     // and the confirm join reads it again after return
     val vocab = benchmark
-      .select(explode(expr(s"word_shingle_hashes($textCol, $n)")).as("shingle"))
+      .select(explode(call("word_shingle_hashes", col(textCol), lit(n))).as("shingle"))
       .distinct()
       .localCheckpoint(true)
     val sketch = vocab
-      .agg(expr(s"bloom_agg(shingle, ${estItems}L, ${numBits}L)")).head()
+      .agg(call("bloom_agg", col("shingle"), lit(estItems), lit(numBits))).head()
     val pre =
       if (sketch.isNullAt(0)) sh.where(lit(false))
-      else sh.where(call_function("bloom_might_contain",
+      else sh.where(call("bloom_might_contain",
         lit(sketch.getAs[Array[Byte]](0)), col("shingle")))
     pre.join(vocab, Seq("shingle"))
       .groupBy("id").agg(count(lit(1)).as("n_overlap"))
@@ -2457,14 +2454,13 @@ object Corpus {
     * the sketch runs.
     */
   def qTermCountsCms(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHashStr.register(spark)
     val words = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
     val exact = words.groupBy("word").agg(count(lit(1)).as("n_exact"))
     val top = exact.orderBy(col("n_exact").desc, col("word")).limit(CmsTopN)
     def bucket(d: Column, w: Column): Column =
-      pmod(call_function("poly_hash",
+      pmod(call("poly_hash",
         concat(d.cast("string"), lit("|"), w)), lit(CmsWidth.toLong))
     val sketch = words
       .select(col("word"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.SqlFunctions.call
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2.3
   * #25-28): exact hash dedup, n-gram Jaccard near-dup, MinHash+LSH,
@@ -87,9 +88,8 @@ object Dedup {
     * MinHashLSH applies to its input.
     */
   private def shingleSets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     Tables.documents(spark, dir)
-      .select(col("doc_id"), expr("word_shingles(text, 3)").as("shingles"))
+      .select(col("doc_id"), call("word_shingles", col("text"), lit(3)).as("shingles"))
       .withColumn("n_shingles", size(col("shingles")).cast("long"))
       .persist()
   }
@@ -334,7 +334,6 @@ object Dedup {
       bands: Int, rowsPerBand: Int): DataFrame = {
     require(bands > 0 && rowsPerBand > 0,
       s"banding dials must be positive, got bands=$bands rows=$rowsPerBand")
-    graft.functions.MinHashSig.register(spark)
     minhashLshPipeline(spark, dir, "minhash_sig",
       slots => xxhash64(slots: _*), bands, rowsPerBand)
   }
@@ -377,7 +376,7 @@ object Dedup {
     val K = nBands * nRowsPerBand
     val Bands = nBands; val RowsPerBand = nRowsPerBand
     val sigs = sets
-      .select(col("doc_id"), expr(s"$sigFn(shingles, $K)").as("sig"))
+      .select(col("doc_id"), call(sigFn, col("shingles"), lit(K)).as("sig"))
       .where(col("sig").isNotNull)
     val bandCols = (0 until Bands).map { j =>
       bucketOf((0 until RowsPerBand).map(r =>
@@ -429,7 +428,6 @@ object Dedup {
     * pipeline's whole candidate+verify surface into a hash-match.
     */
   def qDedupMinhashGated(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MinHashPolySig.register(spark)
     val P = graft.functions.PolyHash.Mod1
     // band bucket = ((s₀·31 + s₁)·31 + s₂)·31 + s₃ mod p — each slot
     // value < p < 2^30, so every intermediate stays inside a long
@@ -641,12 +639,10 @@ object Dedup {
   private[graft] def winnowPairs(docs: DataFrame, idCol: String,
       textCol: String, k: Int, w: Int, tau: Double,
       dfCap: Long): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.WinnowFps.register(spark)
     val fps = docs
       .withColumn("norm", contentNormOf(col(textCol)))
       .select(col(idCol).as("doc_id"),
-        expr(s"winnow_fps(norm, $k, $w)").as("fps"))
+        call("winnow_fps", col("norm"), lit(k), lit(w)).as("fps"))
     val ex = fps.select(col("doc_id"), explode(col("fps")).as("fp"))
     val rare = ex.groupBy("fp").agg(count(lit(1)).as("df"))
       .where(col("df") <= dfCap)
@@ -1210,10 +1206,9 @@ object Dedup {
   private[graft] def incrementalJaccard(docs: DataFrame, idCol: String,
       textCol: String, deltaCol: String, n: Int, tau: Double,
       dfCap: Int): DataFrame = {
-    graft.functions.WordShingleHashes.register(docs.sparkSession)
     val ex0 = docs
       .select(col(idCol).as("id"), col(deltaCol).as("is_delta"),
-        explode(expr(s"word_shingle_hashes($textCol, $n)")).as("shingle"))
+        explode(call("word_shingle_hashes", col(textCol), lit(n))).as("shingle"))
     incrementalPairsFromExploded(ex0, tau, dfCap)
   }
 
@@ -1480,11 +1475,10 @@ object Dedup {
     * over base+delta — each per its own contract).
     */
   def qDupClustersIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingleHashes.register(spark)
     val ex0 = Tables.documents(spark, dir)
       .select(col("doc_id").as("id"),
         (pmod(col("doc_id"), lit(DeltaMod)) === DeltaRes).as("is_delta"),
-        explode(expr("word_shingle_hashes(text, 3)")).as("shingle"))
+        explode(call("word_shingle_hashes", col("text"), lit(3))).as("shingle"))
       .persist()
     // the base labeling is the "arrives already clustered" premise of
     // this operator — a real deployment reads it from the persisted
@@ -1569,7 +1563,6 @@ object Dedup {
     * bit_count verification — the scale shape documented there).
     */
   def qDedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SimHash64.register(spark)
     // token-less docs carry no signature (the historical contract —
     // they produced no exploded rows in the old formulation)
     val docs = Tables.documents(spark, dir)
@@ -1595,7 +1588,7 @@ object Dedup {
       .map(i => when(col(s"c$i") > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ bitwiseOR _)
     docs.select(col("doc_id"), col("source"),
-        expr("simhash64(text)").as("sig"))
+        call("simhash64", col("text")).as("sig"))
       .join(sums.select(col("doc_id"), refSig.as("ref_sig")), "doc_id")
       .groupBy("source")
       .agg(count(lit(1)).as("docs_signed"),
@@ -1680,10 +1673,9 @@ object Dedup {
     * meaningful. The production #28 keeps xxhash64's 64 bits.
     */
   def qDedupSimhashGated(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SimHashPoly.register(spark)
     val sim = Tables.documents(spark, dir)
       .where(expr("exists(split(text, ' '), t -> t <> '')"))
-      .select(col("doc_id"), expr("simhash_poly(text)").as("simhash"))
+      .select(col("doc_id"), call("simhash_poly", col("text")).as("simhash"))
     hammingNearDupPairs(sim, "doc_id", "simhash", hammingMax = 3)
       .select(col("doc_a"), col("doc_b"), col("hamming").cast("long").as("hamming"))
       .orderBy("doc_a", "doc_b")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.SqlFunctions.call
 
 /** A multimodal row: opaque binary payload + typed metadata (SURVEY.md
   * §2.3 #36). The payload is an opaque `binary` column — at 100 TB this
@@ -516,7 +517,6 @@ object Multimodal {
     * path's recall on these same vectors.
     */
   def qCrossmodalTopk(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val media = decodeFeatures(mediaTable(spark, dir)).toDF()
       .select(col("doc_id"), md5Vec(col("payload_md5")).as("v"))
     val q = Tables.documents(spark, dir)
@@ -528,7 +528,7 @@ object Multimodal {
       .partitionBy("q_id").orderBy(col("cos").desc, col("doc_id"))
     media.crossJoin(broadcast(q))
       .where(col("doc_id") =!= col("q_id"))
-      .withColumn("cos", call_function("cosine_sim", col("qv"), col("v")))
+      .withColumn("cos", call("cosine_sim", col("qv"), col("v")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= 5)
       .select("q_id", "rank", "doc_id", "cos")

@@ -4,12 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.CosineSimilarity
+import graft.functions.SqlFunctions.call
 
 /** Embedding similarity operators (SURVEY.md §2.3 #29-31): near-dup
   * detection, brute-force cosine top-k ANN, and IVF ANN.
   *
-  * All cosine math goes through the codegen'd [[CosineSimilarity]]
+  * All cosine math goes through the codegen'd [[graft.functions.CosineSimilarity]]
   * expression — a single fused ascending-index loop whose result is
   * bit-identical to the DuckDB oracle's `list_reduce` left folds, so
   * float outputs need no rounding to hash-match.
@@ -59,15 +59,10 @@ object Similarity {
 
   /** The codegen'd expression, via the session registry (public API). */
   private def cosine(a: Column, b: Column): Column =
-    call_function("cosine_sim", a, b)
+    call("cosine_sim", a, b)
 
-  /** embeddings with the float vector cast to array<double> (column v);
-    * also (idempotently) registers the cosine_sim expression.
-    */
+  /** embeddings with the float vector cast to array<double> (column v). */
   private def emb(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.UsableVec.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
   }
@@ -80,7 +75,7 @@ object Similarity {
     * `list_reduce(list_prepend(0.0, ...))` bit-for-bit.
     */
   private def planeDot(v: Column, p: Int): Column =
-    call_function("dot_product", v, array(hyperplane(p).map(lit).toSeq: _*))
+    call("dot_product", v, array(hyperplane(p).map(lit).toSeq: _*))
 
   /** Per-band integer bucket from the sign bits of 4 plane dots. */
   private def bandBucket(v: Column, band: Int, bits: Int = BitsPerBand): Column =
@@ -580,7 +575,7 @@ object Similarity {
     * vector can carry a finite positive self-dot.
     */
   private def usableVec(v: Column): Column =
-    call_function("usable_vec", v, lit(Dim))
+    call("usable_vec", v, lit(Dim))
 
   /** Usable AND dimension-complete embeddings — exactly the oracle's
     * `e` CTE: length = [[Dim]], no NULL element, positive finite
@@ -600,7 +595,7 @@ object Similarity {
     * integer-exact double division), `c_i` (new centroids, empty
     * cells carry the previous one), and `afin` (final assignment
     * against `c_iters`). Every cosine is the #30 ascending left fold,
-    * bit-identical to the codegen'd [[CosineSimilarity]].
+    * bit-identical to the codegen'd [[graft.functions.CosineSimilarity]].
     */
   private def kmeansFitCtesSql(k: Int, iters: Int): String = {
     def fold(a: String, b: String) =
@@ -906,8 +901,6 @@ object Similarity {
     * exact/approx pairing as #30/#31.
     */
   def qKnnLabelPurity(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.functions.UsableVec.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -1012,8 +1005,8 @@ object Similarity {
     val picks = (0 until PqM).map { s =>
       val sub = slice(col("v"), s * PqSubDim + 1, PqSubDim)
       val cw = slice(col("cv"), s * PqSubDim + 1, PqSubDim)
-      val key = call_function("dot_product", cw, cw) -
-        lit(2.0) * call_function("dot_product", sub, cw)
+      val key = call("dot_product", cw, cw) -
+        lit(2.0) * call("dot_product", sub, cw)
       min_by(struct(col("cent_id").as("code"), cw.as("cw")),
         struct(key.as("k"), col("cent_id").as("t"))).as(s"p$s")
     }
@@ -1050,7 +1043,7 @@ object Similarity {
     pqGateEncoded(spark, dir)
       .crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
-      .withColumn("adc", call_function("dot_product", col("qv"), col("recon")))
+      .withColumn("adc", call("dot_product", col("qv"), col("recon")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= TopK)
       .select("q_id", "rank", "vec_id", "adc")
@@ -1165,7 +1158,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
       .withColumn("score",
-        call_function("dot_product", col("qv"), col("recon")))
+        call("dot_product", col("qv"), col("recon")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= TopK)
       .select("q_id", "rank", "vec_id", "score")
@@ -1289,7 +1282,7 @@ object Similarity {
     recon.join(broadcast(probes), "cell")
       .where(col("vec_id") =!= col("q_id"))
       .withColumn("score",
-        call_function("dot_product", col("qv"), col("vhat")))
+        call("dot_product", col("qv"), col("vhat")))
       .withColumn("rank", row_number().over(wTop).cast("long"))
       .where(col("rank") <= TopK)
       .select("q_id", "rank", "vec_id", "score")
@@ -1429,7 +1422,7 @@ object Similarity {
     recon.join(broadcast(probes), "cell")
       .where(col("vec_id") =!= col("q_id"))
       .withColumn("score",
-        call_function("dot_product", col("qv"), col("vhat")))
+        call("dot_product", col("qv"), col("vhat")))
       .withColumn("rank", row_number().over(wTop).cast("long"))
       .where(col("rank") <= TopK)
       .select("q_id", "rank", "vec_id", "score")
@@ -1657,7 +1650,6 @@ object Similarity {
   private[graft] def kcenterCore(e0: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val spark = e0.sparkSession
-    CosineSimilarity.register(spark)
     val e = e0.persist()
     try {
       import spark.implicits._
@@ -1763,7 +1755,7 @@ object Similarity {
     val w = Window.partitionBy("q_id").orderBy(col("dot").desc, col("vec_id"))
     val exact = e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
-      .withColumn("dot", call_function("dot_product", col("qv"), col("v")))
+      .withColumn("dot", call("dot_product", col("qv"), col("v")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= TopK)
       .select(col("q_id"), col("vec_id"))
@@ -1908,8 +1900,8 @@ object Similarity {
     val picks = (0 until PqM).map { s =>
       val sub = slice(col("rv"), s * PqSubDim + 1, PqSubDim)
       val cw = slice(col("cbv"), s * PqSubDim + 1, PqSubDim)
-      val key = call_function("dot_product", cw, cw) -
-        lit(2.0) * call_function("dot_product", sub, cw)
+      val key = call("dot_product", cw, cw) -
+        lit(2.0) * call("dot_product", sub, cw)
       min_by(cw, struct(key.as("k"), col("code").as("t"))).as(s"p$s")
     }
     withRes.crossJoin(broadcast(seeds))
@@ -1958,14 +1950,14 @@ object Similarity {
     val approx = ivfPqGateEncoded(spark, dir)
       .join(broadcast(probes), "cell")
       .where(col("vec_id") =!= col("q_id"))
-      .withColumn("adc", call_function("dot_product", col("qv"), col("rhat")))
+      .withColumn("adc", call("dot_product", col("qv"), col("rhat")))
       .withColumn("rank", row_number().over(wAdc))
       .where(col("rank") <= TopK)
       .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
     val wDot = Window.partitionBy("q_id").orderBy(col("dot").desc, col("vec_id"))
     val exact = e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
-      .withColumn("dot", call_function("dot_product", col("qv"), col("v")))
+      .withColumn("dot", call("dot_product", col("qv"), col("v")))
       .withColumn("rank", row_number().over(wDot))
       .where(col("rank") <= TopK)
       .select(col("q_id"), col("vec_id"))
@@ -2131,7 +2123,7 @@ object Similarity {
     val short = ivfPqGateEncoded(spark, dir)
       .join(broadcast(probes), "cell")
       .where(col("vec_id") =!= col("q_id"))
-      .withColumn("adc", call_function("dot_product", col("qv"), col("rhat")))
+      .withColumn("adc", call("dot_product", col("qv"), col("rhat")))
       .withColumn("rank", row_number().over(wAdc))
       .where(col("rank") <= RerankShort)
       .select(col("q_id"), col("vec_id"), col("rank"))
@@ -2144,14 +2136,14 @@ object Similarity {
     val rer = e.select(col("vec_id"), col("v"))
       .join(broadcast(short.join(q, "q_id")
         .select(col("q_id"), col("qv"), col("vec_id"))), "vec_id")
-      .withColumn("dot", call_function("dot_product", col("qv"), col("v")))
+      .withColumn("dot", call("dot_product", col("qv"), col("v")))
       .withColumn("rrank", row_number().over(wRer))
       .where(col("rrank") <= TopK)
       .select(col("q_id"), col("vec_id"), lit(1L).as("hit_rer"))
     val wDot = Window.partitionBy("q_id").orderBy(col("dot").desc, col("vec_id"))
     val exact = e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
-      .withColumn("dot", call_function("dot_product", col("qv"), col("v")))
+      .withColumn("dot", call("dot_product", col("qv"), col("v")))
       .withColumn("rank", row_number().over(wDot))
       .where(col("rank") <= TopK)
       .select(col("q_id"), col("vec_id"))

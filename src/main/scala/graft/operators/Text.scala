@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.SqlFunctions.call
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.3
   * #32-35): language-ID heuristic, quality scoring, token counting,
@@ -113,9 +114,6 @@ object Text {
     * ((lang, gram) count + per-lang rank), both tiny.
     */
   def qTextLangidNgram(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CharNgramHashes.register(spark)
-    graft.functions.CharNgramProfile.register(spark)
-    graft.functions.OopDistance.register(spark)
     // persisted: the FIT (labeled gram frequencies) and the CLASSIFY
     // (per-row profiles) each consume the normalized text — uncached
     // the corpus would be scanned and normalized twice (the #47
@@ -132,7 +130,7 @@ object Text {
     // slice, per-lang top-N rank, then one g→rank map per language
     // (≤ N entries each) — the broadcast model
     val langCnt = docs.where(col("lang").isNotNull)
-      .select(col("lang"), explode(expr("char_ngram_hashes(norm, 3)")).as("g"))
+      .select(col("lang"), explode(call("char_ngram_hashes", col("norm"), lit(3))).as("g"))
       .groupBy("lang", "g").agg(count(lit(1)).as("c"))
     val wLang = Window.partitionBy("lang").orderBy(col("c").desc, col("g"))
     val profMaps = langCnt
@@ -147,12 +145,12 @@ object Text {
     // LEFT, so docs survive even a fit with zero labeled documents.
     val scored = docs
       .select(col("doc_id"), col("lang"),
-        expr(s"char_ngram_profile(norm, 3, $LangProfileN)").as("prof"))
+        call("char_ngram_profile", col("norm"), lit(3), lit(LangProfileN)).as("prof"))
       .join(broadcast(profMaps), lit(true), "left")
       .select(col("doc_id"), col("lang"), col("cand"),
         when(col("cand").isNull || col("prof").isNull ||
           size(col("prof")) === 0, lit(null).cast("long"))
-          .otherwise(expr(s"oop_distance(prof, pm, $LangProfileN)"))
+          .otherwise(call("oop_distance", col("prof"), col("pm"), lit(LangProfileN)))
           .as("oop"))
     // oop is null exactly when the doc has no profile or no language
     // was fit — per doc all-or-none, so the null argmin IS the
@@ -408,12 +406,11 @@ object Text {
     * points with zero per-char allocation).
     */
   def qDocFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHashStr.register(spark)
     Tables.documents(spark, dir)
       .withColumn("norm",
         trim(regexp_replace(lower(col("text")), " +", " ")))
       .withColumn("fp_md5", md5(col("norm")))
-      .withColumn("rolling_hash", call_function("poly_hash", col("norm")))
+      .withColumn("rolling_hash", call("poly_hash", col("norm")))
       .select("doc_id", "fp_md5", "rolling_hash")
       .orderBy("doc_id")
   }
@@ -456,7 +453,6 @@ object Text {
     * `n_grams`, `n_distinct`, `dup_fraction`, `is_repetitive`.
     */
   private[graft] def withRepetition(df: DataFrame): DataFrame = {
-    graft.functions.WordShingles.register(df.sparkSession)
     df
       .withColumn("n_grams", greatest(wsTokenCount - 2, lit(0L)))
       // null text has 0 distinct 3-grams, consistent with its n_grams
@@ -464,7 +460,7 @@ object Text {
       // coalesce the column is NULL while the oracle's CASE emits 0
       // (r19 null-source nasty corpus)
       .withColumn("n_distinct",
-        coalesce(size(expr("word_shingles(text, 3)")).cast("long"), lit(0L)))
+        coalesce(size(call("word_shingles", col("text"), lit(3))).cast("long"), lit(0L)))
       .withColumn("dup_fraction",
         when(col("n_grams") === 0, lit(0.0))
           .otherwise(lit(1.0) -
@@ -910,13 +906,12 @@ object Text {
     */
   private[graft] def classifierFeatures(df: DataFrame, idCol: String,
       textCol: String, dims: Int = ClsDims): DataFrame = {
-    graft.functions.PolyHashStr.register(df.sparkSession)
     val toks = df.select(col(idCol).as("doc_id"),
       explode(filter(split(lower(col(textCol)), " "), t => t =!= "")).as("t"))
     val nt = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     toks
       .select(col("doc_id"),
-        pmod(call_function("poly_hash", col("t")), lit(dims.toLong))
+        pmod(call("poly_hash", col("t")), lit(dims.toLong))
           .cast("int").as("i"))
       .groupBy("doc_id", "i").agg(count(lit(1)).as("c"))
       .join(nt, "doc_id")
@@ -967,13 +962,12 @@ object Text {
     */
   private[graft] def classifierFeatureVecs(df: DataFrame, idCol: String,
       textCol: String, dims: Int = ClsDims): DataFrame = {
-    graft.functions.PolyHashStr.register(df.sparkSession)
     val emptyFv = array().cast("array<struct<i:int,x:double>>")
     val perDoc = df
       .select(col(idCol).as("doc_id"),
         explode(filter(split(lower(col(textCol)), " "), t => t =!= "")).as("t"))
       .select(col("doc_id"),
-        pmod(call_function("poly_hash", col("t")), lit(dims.toLong))
+        pmod(call("poly_hash", col("t")), lit(dims.toLong))
           .cast("int").as("i"))
       .groupBy("doc_id", "i").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
@@ -1004,7 +998,7 @@ object Text {
     * spec-pinned bit-equal to the HOF formulation.
     */
   private def scoreVecExpr(fvCol: Column, w: Array[Double]): Column =
-    call_function("fx_dot", fvCol, typedLit(w.toSeq))
+    call("fx_dot", fvCol, typedLit(w.toSeq))
 
   /** Full-batch GD fit of the linear probe over the COLLECTED feature
     * frame ([[classifierFeatureVecs]], caller-persisted): w₀ = 0; per
@@ -1023,8 +1017,6 @@ object Text {
     */
   private[graft] def classifierFit(featV: DataFrame, lab: DataFrame,
       dims: Int, iters: Int, lr: Double): Array[Double] = {
-    val spark = featV.sparkSession
-    graft.functions.ClassifierFx.register(spark)
     // labels serve the count and the round loop's join — persist both
     // the label frame and the PRE-JOINED (featV ⋈ lab) frame for the
     // loop's lifetime: the inner doc_id join is identical every round
@@ -1052,7 +1044,7 @@ object Text {
         // floor((·)·10⁶) longs, so the trajectory is bit-preserved
         // (spec-pinned equal to the exploded formulation).
         val grads = fl
-          .select(call_function("fx_grad", col("fv"), col("y"),
+          .select(call("fx_grad", col("fv"), col("y"),
             typedLit(w.toSeq)).as("g"))
           .collect()(0).getSeq[Long](0)
         w = w.zipWithIndex.map { case (v, i) =>
@@ -1076,7 +1068,6 @@ object Text {
     * (the groupBy(doc_id) grain was materialized at collect time).
     */
   private def scoreFeatVec(featV: DataFrame, w: Array[Double]): DataFrame = {
-    graft.functions.ClassifierFx.register(featV.sparkSession)
     featV.select(col("doc_id"), scoreVecExpr(col("fv"), w).as("score"))
   }
 
@@ -1155,10 +1146,9 @@ object Text {
     * dims+1 weights reach the driver.
     */
   def qQualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHashStr.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val isRef = pmod(call_function("poly_hash", col("source")), lit(4L)) === 0
+    val isRef = pmod(call("poly_hash", col("source")), lit(4L)) === 0
     val lab = docs.select(col("doc_id"),
       when(coalesce(isRef, lit(false)), lit(1.0)).otherwise(lit(0.0)).as("y"))
     // one feature build serves the fit AND the final scoring — the
@@ -1274,10 +1264,9 @@ object Text {
     * summarizes.
     */
   def qClassifierCalibration(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHashStr.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val isRef = pmod(call_function("poly_hash", col("source")), lit(4L)) === 0
+    val isRef = pmod(call("poly_hash", col("source")), lit(4L)) === 0
     val lab = docs.select(col("doc_id"),
       when(coalesce(isRef, lit(false)), lit(1.0)).otherwise(lit(0.0)).as("y"))
     val featV = classifierFeatureVecs(docs, "doc_id", "text").persist()
@@ -1342,11 +1331,10 @@ object Text {
     * per side; nothing new shuffles.
     */
   def qClassifierHoldout(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHashStr.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val isRef = pmod(call_function("poly_hash", col("source")), lit(4L)) === 0
-    val split = pmod(call_function("poly_hash",
+    val isRef = pmod(call("poly_hash", col("source")), lit(4L)) === 0
+    val split = pmod(call("poly_hash",
       col("doc_id").cast("string")), lit(5L))
     val lab = docs.where(split =!= 0)
       .select(col("doc_id"),
@@ -1656,10 +1644,9 @@ object Text {
     */
   private[graft] def gopherRepetition(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    graft.functions.GopherRepMeasures.register(df.sparkSession)
     val names = graft.functions.GopherRepMeasures.measureNames :+ "pass"
     df.select(col(idCol),
-        expr(s"gopher_rep_measures($textCol)").as("_m"))
+        call("gopher_rep_measures", col(textCol)).as("_m"))
       .select(col(idCol) +: names.map(n => col(s"_m.$n").as(n)): _*)
   }
 
@@ -1694,12 +1681,11 @@ object Text {
     */
   private[graft] def filterAgreement(df: DataFrame, idCol: String,
       textCol: String, langCol: String): DataFrame = {
-    graft.functions.GopherRepMeasures.register(df.sparkSession)
     val base = df.select(col(idCol).as("doc_id"),
       col(textCol).as("text"), col(langCol).as("lang"))
     val flags3 = withGopher(withC4(base, "text"), "text")
       .withColumn("f_gopher_repetition",
-        expr("gopher_rep_measures(text).pass"))
+        call("gopher_rep_measures", col("text")).getField("pass"))
       // NULL-text rows carry NULL battery flags; coalesce ALL flags to
       // false (the dirty-record convention the LM flag below already
       // follows) or those rows silently vanish from every pair sum

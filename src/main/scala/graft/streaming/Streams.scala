@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.SqlFunctions.call
 
 /** A behavior-log event as seen by the streaming layer (`ts` is the
   * event-time column watermarks attach to; `ts_us` the epoch-micros
@@ -200,13 +201,12 @@ object Streams {
   def contaminationCheck(docs: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 3,
       minOverlap: Long = graft.operators.Corpus.ContaminationK): DataFrame = {
-    graft.functions.WordShingleHashes.register(docs.sparkSession)
     // persisted: the static side of a stream-static join re-executes
     // every micro-batch — without the cache a long-running ingest
     // stream would re-shingle and re-aggregate the whole benchmark per
     // batch, dominating small batches
     val vocab = benchmark
-      .select(explode(expr(s"word_shingle_hashes($textCol, $n)")).as("s"))
+      .select(explode(call("word_shingle_hashes", col(textCol), lit(n))).as("s"))
       .agg(collect_set(col("s")).as("_vocab"))
       .persist()
     docs
@@ -215,7 +215,7 @@ object Streams {
       // HOF ran INTERPRETED on every streamed doc; same longs, codegen
       .withColumn("n_overlap",
         size(array_intersect(
-          expr(s"word_shingle_hashes($textCol, $n)"),
+          call("word_shingle_hashes", col(textCol), lit(n)),
           col("_vocab"))).cast("long"))
       .where(col("n_overlap") >= 1)
       .select(col(idCol).as("id"), col("n_overlap"),
@@ -1112,8 +1112,6 @@ object Streams {
       centroids: DataFrame, statePath: String, idCol: String,
       vecCol: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    graft.functions.CosineSimilarity.register(spark)
     val root = new Path(new Path(statePath).toUri.getPath)
     if (batch.isEmpty) return
     // usable-vector filter, the #161/validateEmbeddings convention the
@@ -1133,7 +1131,7 @@ object Streams {
     val v = col(vecCol).cast("array<double>")
     val usable = batch.select(col(idCol), col(vecCol))
       .where(!exists(v, x => x.isNull) &&
-        call_function("cosine_sim", v,
+        call("cosine_sim", v,
           array(cv0.map(lit): _*)).isNotNull)
     graft.api.Graft.ivfIndex(usable,
         idCol, vecCol, centroids, "cent_id", "cv")
@@ -2560,7 +2558,6 @@ object Streams {
       langCol: String): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    graft.functions.WordShingleHashes.register(spark)
     val root = new Path(new Path(statePath).toUri.getPath)
     migrateLegacyFunnelFps(spark, root)
     val isBench = pmod(col("doc_id"), lit(97L)) === 0
@@ -2593,7 +2590,7 @@ object Streams {
         .write.mode("overwrite")
         .parquet(new Path(root, s"funnel_fps/batch=$batchId").toString)
       scored.where(isBench)
-        .select(explode(expr("word_shingle_hashes(text, 3)")).as("lk"))
+        .select(explode(call("word_shingle_hashes", col("text"), lit(3))).as("lk"))
         .distinct()
         .write.mode("overwrite")
         .parquet(new Path(root, s"bench/batch=$batchId").toString)
@@ -2607,7 +2604,7 @@ object Streams {
         .crossJoin(broadcast(vocab))
         .select(col("doc_id"),
           (size(array_intersect(
-            expr("word_shingle_hashes(text, 3)"),
+            call("word_shingle_hashes", col("text"), lit(3)),
             col("_vocab"))).cast("long") >=
             graft.operators.Corpus.ContaminationK).as("contaminated"))
         .write.mode("overwrite")

@@ -187,7 +187,7 @@ class AnnSpec extends SparkSpec {
     }
     val e = (base ++ near).toDF("vec_id", "v")
     val tau = 0.98
-    graft.functions.CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     val bruteDrop = e.select(col("vec_id").as("a"), col("v").as("va"))
       .crossJoin(e.select(col("vec_id").as("b"), col("v").as("vb")))
       .where(col("a") < col("b"))
@@ -300,7 +300,7 @@ class AnnSpec extends SparkSpec {
     // populations cover the usable corpus exactly once
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val usable = e.where(size(col("v")) === 64 &&
       !exists(col("v"), x => x.isNull) &&
       call_function("dot_product", col("v"), col("v")) > 0).count()
@@ -308,7 +308,7 @@ class AnnSpec extends SparkSpec {
       "every usable vector must be assigned to exactly one center")
     // greedy step 1 re-derived independently: the first non-seed center
     // IS the vector farthest (1 - cos) from the seed, ties lowest id
-    graft.functions.CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     val seedV = e.where(col("vec_id") === out(0).getLong(1))
       .select(col("v").as("sv"))
     val far = e.crossJoin(broadcast(seedV))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class ClassifierFxSpec extends SparkSpec {
 
   private def registered() = {
-    graft.functions.ClassifierFx.register(spark)
+    graft.api.Graft.install(spark)
     spark
   }
 

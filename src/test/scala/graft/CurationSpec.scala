@@ -560,7 +560,7 @@ class CurationSpec extends SparkSpec {
     // pins the math; THIS pins the generalization).
     import spark.implicits._
     import graft.api.Graft
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     val refWords = Seq("theory", "prime", "numbers", "proofs",
       "rome", "history", "ancient", "carthage")
     val crawlWords = Seq("click", "buy", "cheap", "pills",
@@ -625,7 +625,7 @@ class CurationSpec extends SparkSpec {
     // cannot depend on partitioning or aggregation order (the
     // kmeansCentroids discipline)
     import spark.implicits._
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     val docs = Tables.documents(spark, sfTiny)
       .select(col("doc_id"), col("source"), col("text"))
     val isRef = pmod(call_function("poly_hash", col("source")), lit(4L)) === 0

@@ -239,7 +239,7 @@ class DedupSpec extends SparkSpec {
     // the same signatures — the pigeonhole recall guarantee checked
     // end-to-end on real data (all-pairs is affordable only in a spec;
     // it is also exactly the shape the DuckDB oracle uses)
-    graft.functions.SimHashPoly.register(spark)
+    graft.api.Graft.install(spark)
     val sigs = Tables.documents(spark, sf)
       .where(expr("exists(split(text, ' '), t -> t <> '')"))
       .select(col("doc_id"), expr("simhash_poly(text)").as("s"))
@@ -270,7 +270,7 @@ class DedupSpec extends SparkSpec {
       Tables.documents(spark, sf), "doc_id", "text")
     assert(df.where(col("hamming") > 3).count() == 0)
     assert(df.where(col("doc_a") >= col("doc_b")).count() == 0)
-    graft.functions.SimHash64.register(spark)
+    graft.api.Graft.install(spark)
     val sigs = Tables.documents(spark, sf)
       .where(expr("exists(split(text, ' '), t -> t <> '')"))
       .select(col("doc_id"), expr("simhash64(text)").as("s"))

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.functions.{CosineSimilarity, DotProduct, MinHashSig, SimHash64, WordShingles}
 
 /** The custom Catalyst expressions: semantics pinned against the
   * built-in formulations the oracles use, plus the extensions entry
@@ -11,7 +10,7 @@ import graft.functions.{CosineSimilarity, DotProduct, MinHashSig, SimHash64, Wor
 class FunctionsSpec extends SparkSpec {
 
   test("word_shingles matches the built-in HOF pipeline on real docs") {
-    WordShingles.register(spark)
+    graft.api.Graft.install(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), expr("word_shingles(text, 3)").as("fast"),
         expr("filter(split(text, ' '), t -> t <> '')").as("toks"))
@@ -25,7 +24,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_shingles edge cases: short, empty, repeated-space text") {
-    WordShingles.register(spark)
+    graft.api.Graft.install(spark)
     import spark.implicits._
     val rows = Seq("", "one", "one two", "a b c", "a  b   c", "x x x x")
       .toDF("text")
@@ -39,8 +38,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_shingle_hashes == xxhash64 over word_shingles, element for element") {
-    WordShingles.register(spark)
-    graft.functions.WordShingleHashes.register(spark)
+    graft.api.Graft.install(spark)
     // real docs AND a planted edge corpus (empty / short / multi-space /
     // duplicate shingles / CJK / punctuation) — the fused generator must
     // emit the exact longs the unfused explode->xxhash64 pipeline does,
@@ -63,7 +61,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim agrees with the built-in fold formulation") {
-    CosineSimilarity.register(spark)
+    graft.api.Graft.install(spark)
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(50)
@@ -82,7 +80,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("dot_product agrees with the built-in fold formulation") {
-    DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(50)
@@ -96,8 +94,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("minhash_sig matches the explode + 64×min-agg formulation") {
-    WordShingles.register(spark)
-    MinHashSig.register(spark)
+    graft.api.Graft.install(spark)
     val K = 64
     val sets = Tables.documents(spark, sf)
       .select(col("doc_id"), expr("word_shingles(text, 3)").as("shingles"))
@@ -114,14 +111,14 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("minhash_sig is null on empty shingle sets") {
-    MinHashSig.register(spark)
+    graft.api.Graft.install(spark)
     val r = spark.sql(
       "SELECT minhash_sig(CAST(array() AS ARRAY<STRING>), 4) AS s").collect()(0)
     assert(r.isNullAt(0))
   }
 
   test("simhash64 matches the explode + 64×sum-agg formulation") {
-    SimHash64.register(spark)
+    graft.api.Graft.install(spark)
     val docs = Tables.documents(spark, sf)
     val fast = docs
       .where(expr("exists(split(text, ' '), t -> t <> '')"))
@@ -155,7 +152,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("minhash_poly_sig matches an independent per-slot fold") {
-    graft.functions.MinHashPolySig.register(spark)
+    graft.api.Graft.install(spark)
     import spark.implicits._
     val shingles = Seq("a b c", "b c d", "汉字 x y", "𝄞 g clef", "")
     val got = Seq(shingles).toDF("sh")
@@ -177,7 +174,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash_poly matches an independent re-derivation") {
-    graft.functions.SimHashPoly.register(spark)
+    graft.api.Graft.install(spark)
     import spark.implicits._
     val texts = Seq("the cat sat on the cat", "汉 字 汉  字", // double space
       "𝄞 solo", "lone", "a", "")
@@ -198,7 +195,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("poly_hash matches an independent code-point fold, null-safe") {
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     import spark.implicits._
     val texts = Seq("the cat", "汉字", "𝄞 clef", "a", " ", "")
     val got = texts.toDF("t")
@@ -216,8 +213,7 @@ class FunctionsSpec extends SparkSpec {
     // the whole expression family must refuse wrong types at ANALYSIS
     // (this test caught a latent String.apply in every error branch:
     // `simpleString(10)` indexes the type name — catalogString now)
-    graft.functions.SimHash64.register(spark)
-    graft.functions.WordShingles.register(spark)
+    graft.api.Graft.install(spark)
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT simhash64(42)").collect()
     }
@@ -227,9 +223,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("char_ngram_profile ranks by (count desc, gram asc); oop_distance matches the fold") {
-    graft.functions.CharNgramHashes.register(spark)
-    graft.functions.CharNgramProfile.register(spark)
-    graft.functions.OopDistance.register(spark)
+    graft.api.Graft.install(spark)
     import spark.implicits._
     // the profile must equal the relational count→row_number form it
     // replaced (#192's r17 rework): count occurrences of each gram
@@ -281,23 +275,79 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  /** The 19 SQL functions graft ships, spelled out independently of
+    * the table that registers them. */
+  private val graftFunctionNames = Seq("cosine_sim", "dot_product",
+    "usable_vec", "word_shingles", "word_shingle_hashes", "minhash_sig",
+    "minhash_poly_sig", "simhash64", "simhash_poly", "poly_hash",
+    "winnow_fps", "char_ngram_hashes", "char_ngram_profile", "oop_distance",
+    "gopher_rep_measures", "fx_dot", "fx_grad", "bloom_agg",
+    "bloom_might_contain")
+
   test("registered functions resolve in plain SQL") {
-    CosineSimilarity.register(spark)
-    WordShingles.register(spark)
+    graft.api.Graft.install(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c, " +
         "word_shingles('a b c d', 3) AS s").collect()(0)
     assert(r.getDouble(0) == 1.0)
     assert(r.getSeq[String](1) == Seq("a b c", "b c d"))
+    graft.api.Graft.install(spark) // idempotent: a repeat call is a no-op
+    val missing = graftFunctionNames.filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not registered by install: $missing")
   }
 
-  test("GraftExtensions wiring is well-formed") {
-    // getOrCreate would hand back the suite's shared session (where the
-    // functions are already registered), so the end-to-end injection
-    // can't be observed here; exercising apply() still catches broken
-    // wiring (bad identifiers, builder arity) at construction time. The
-    // builders themselves are the ones the SQL-resolution test runs.
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
+  private val extensionProbes = Seq(
+    "SELECT fx_dot(array(named_struct('i', 1, 'x', 2.0d)), array(0.5d, 0.25d))",
+    "SELECT winnow_fps('the quick brown fox jumps over the lazy dog', 5, 4)",
+    "SELECT poly_hash('the cat')")
+
+  test("a session wired only by GraftExtensions resolves all 19 functions") {
+    val shared = spark // the SparkContext the new session attaches to
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+    assert(ext ne shared, "the builder handed back the shared session")
+    val missing = graftFunctionNames.filterNot(ext.catalog.functionExists)
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+    graft.api.Graft.install(spark)
+    for (q <- extensionProbes) {
+      val got = ext.sql(q).collect().toSeq
+      assert(!got.head.isNullAt(0), s"$q returned null")
+      assert(got == spark.sql(q).collect().toSeq, s"$q differs from the installed session")
+    }
+  }
+
+  test("fx_dot fails the task on a feature index outside the weights") {
+    graft.api.Graft.install(spark)
+    // the index depends on a column, so the check runs in a task, not
+    // in constant folding
+    for (i <- Seq(2, -1)) {
+      val e = intercept[Exception] {
+        spark.sql("SELECT fx_dot(array(named_struct('i', CAST(id AS INT) + " +
+          s"($i), 'x', 1.0d)), array(0.5d, 0.25d)) FROM range(1)").collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(s"feature index $i outside weights[0, 2)")),
+        s"index $i: ${msgs.mkString(" | ")}")
+    }
+  }
+
+  test("a wrong argument count fails analysis with the function's arity") {
+    graft.api.Graft.install(spark)
+    val e = intercept[IllegalArgumentException] {
+      spark.sql("SELECT cosine_sim(array(1.0d))").collect()
+    }
+    assert(e.getMessage == "cosine_sim expects exactly 2 arguments, got 1")
+    val e1 = intercept[IllegalArgumentException] {
+      spark.sql("SELECT poly_hash('a', 'b')").collect()
+    }
+    assert(e1.getMessage == "poly_hash expects exactly 1 argument, got 2")
   }
 }

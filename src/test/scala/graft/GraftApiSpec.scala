@@ -14,6 +14,24 @@ class GraftApiSpec extends SparkSpec {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
       s"$what: facade output differs from the gated query")
 
+  test("text-column APIs take any column name: `body text` gives the rows `text` gives") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val isBench = pmod(col("doc_id"), lit(97L)) === 0
+    val apis = Seq[(String, (DataFrame, String) => DataFrame)](
+      "ngramJaccardPairs" -> ((d, t) => Graft.ngramJaccardPairs(d, "doc_id", t)),
+      "shingleIndex" -> ((d, t) => Graft.shingleIndex(d, "doc_id", t)),
+      "simhashPairs" -> ((d, t) => Graft.simhashPairs(d, "doc_id", t)),
+      "contaminationCheck" -> ((d, t) => graft.streaming.Streams.contaminationCheck(
+        d.where(!isBench), d.where(isBench), "doc_id", t)))
+    for ((what, api) <- apis) {
+      val plain = api(docs, "text")
+      val spaced = api(docs.withColumnRenamed("text", "body text"), "body text")
+      assert(plain.count() > 0, s"$what: no rows to compare")
+      assert(plain.exceptAll(spaced).count() == 0 && spaced.exceptAll(plain).count() == 0,
+        s"$what: a column named `body text` changes the rows")
+    }
+  }
+
   test("exactDedup reproduces q_dedup_exact") {
     val api = Graft.exactDedup(Tables.documents(spark, sf), "doc_id", "text")
       .select(col("id").as("doc_id"), col("fp"), col("canonical_id"),

@@ -267,7 +267,7 @@ class IvfIndexSpec extends SparkSpec {
     // cluster, not a removed exchange.
     spark.sql("DROP TABLE IF EXISTS ivf_sq_idx")
     try {
-      graft.functions.UsableVec.register(spark)
+      graft.api.Graft.install(spark)
       val usable = emb.where(call_function("usable_vec", col("v"), lit(64)))
       val bounds = Graft.ivfSqBounds(usable, "vec_id", "v",
         cents, "cent_id", "cv", 64)

@@ -50,7 +50,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("pq ADC: lookup-sum score equals q·recon; recall floor vs exact dot top-k") {
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val codes = Graft.pqEncode(embTable, "vec_id", "v", books)
     val queries = embTable.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -106,7 +106,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("ivfpq raw flavor: full-probe equals plain PQ; routed probes hold a recall floor") {
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val nCells = 8
     val cents = Graft.kmeansCentroids(embTable, "vec_id", "v", nCells, 2)
     // residual = false: raw-vector encoding is the ONLY flavor where
@@ -204,7 +204,7 @@ class PqSpec extends SparkSpec {
     // vector — residuals concentrate around the origin, so the same bit
     // budget buys finer resolution; serving adds the per-(query, cell)
     // q·c constant back into the ADC score
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val nCells = 8
     val cents = Graft.kmeansCentroids(embTable, "vec_id", "v", nCells, 2)
     val rbooks = Graft.ivfPqCodebooks(embTable, "vec_id", "v",
@@ -288,7 +288,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("flavor provenance: codebook marker, build-time agreement, lazy index check") {
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val nCells = 4
     val cents = Graft.kmeansCentroids(embTable, "vec_id", "v", nCells, 1)
     // the fit tags its output with the distribution it was trained on
@@ -341,7 +341,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("rerank: full-shortlist tail equals brute force; hits never below ADC; no corpus shuffle") {
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val nCells = 8
     val cents = Graft.kmeansCentroids(embTable, "vec_id", "v", nCells, 2)
     val rbooks = Graft.ivfPqCodebooks(embTable, "vec_id", "v",
@@ -416,7 +416,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("sq8: byte codes in range, order-free fit, error bound, recall >= pq at equal corpus") {
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     val bounds = Graft.sqBounds(embTable, "vec_id", "v", Dim)
     // the fit is exact min/max — bit-identical under any partitioning,
     // no seed rule involved
@@ -500,7 +500,7 @@ class PqSpec extends SparkSpec {
 
   test("ivf x sq8: flavor refusals, full-probe == flat, planted-NN recall, gate == api") {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     // planted-NN corpus: 8 well-separated block clusters of 40 points
     // (deterministic LCG jitter at 0.05), built as anchor/twin PAIRS —
     // each odd id sits 0.002 off its even anchor, ~25x closer than any
@@ -617,7 +617,7 @@ class PqSpec extends SparkSpec {
     // over an ivfSqIndex built with the gate's deterministic mod-rule
     // centroids — facade and gate cannot drift (GraftApiSpec's same()
     // contract, pinned here where the fixtures live)
-    graft.functions.UsableVec.register(spark)
+    graft.api.Graft.install(spark)
     val emb = embTable
       .where(call_function("usable_vec", col("v"), lit(Dim)))
       .persist()
@@ -647,7 +647,7 @@ class PqSpec extends SparkSpec {
 
   test("ivf x sq8 PER-CELL bounds: raw refusal, unseen-cell assert, beats global under per-cell offsets, gate == api") {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
+    graft.api.Graft.install(spark)
     // the planted anchor/twin corpus of the global-bounds spec
     val pts = (0 until 8).flatMap { c =>
       (0 until 40).map { j =>
@@ -740,7 +740,7 @@ class PqSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       s"corpus-sized join crept into per-cell IVFxSQ serving:\n$plan")
     // 5. gate == api on the gate corpus (the #205 drift pin, per-cell)
-    graft.functions.UsableVec.register(spark)
+    graft.api.Graft.install(spark)
     val emb = embTable
       .where(call_function("usable_vec", col("v"), lit(Dim)))
       .persist()

@@ -855,7 +855,7 @@ class StreamingSpec extends SparkSpec {
     // the final score set equals the batch scorer over all rows.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     val docs = Tables.documents(spark, sfTiny)
       .select(col("doc_id"), col("source"), col("text"))
     val isRef = pmod(call_function("poly_hash", col("source")), lit(4L)) === 0
@@ -1218,7 +1218,7 @@ class StreamingSpec extends SparkSpec {
     // probe fit FROZEN on the even-id labeled slice (sources hashing
     // ≡ 0 mod 4 play the curated side — the #195 gate rule); the
     // odd-id "ingest" half is scored against it
-    graft.functions.PolyHashStr.register(spark)
+    graft.api.Graft.install(spark)
     val seed = docs.where(pmod(col("doc_id"), lit(2)) === 0)
     val model = graft.api.Graft.qualityClassifierModel(seed, "doc_id",
       "text", pmod(call_function("poly_hash", col("source")), lit(4L)) === 0)
@@ -1459,7 +1459,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_ivfsq_").toString
-    graft.functions.UsableVec.register(spark)
+    graft.api.Graft.install(spark)
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .where(call_function("usable_vec", col("v"), lit(64)))
@@ -1552,7 +1552,7 @@ class StreamingSpec extends SparkSpec {
     // index and a served top-k equal the one-shot build over all rows.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.UsableVec.register(spark)
+    graft.api.Graft.install(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_ivfsqk_").toString
     val emb = Tables.embeddings(spark, sfTiny)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -8,7 +8,10 @@
 #   tools/precommit.sh --test     # also run the full ScalaTest suite
 #
 # Fast path: `sbt Test/compile` (~30 s warm) catches every type error in
-# both source trees. `--test` adds the full suite when time allows; the
+# both source trees; `python3 perfbench/build.py` then compiles the
+# benchmark harness (perfbench/scala, which sbt never sees) against
+# src/main, so a renamed public name it calls fails here, not in every
+# benchmark run. `--test` adds the full suite when time allows; the
 # targeted crosscheck of changed queries is tools/crosscheck.py.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -20,6 +23,14 @@ if ! sbt -batch Test/compile >/tmp/graft_precommit.log 2>&1; then
   exit 1
 fi
 echo "[precommit] compile OK"
+
+echo "[precommit] perfbench/build.py (benchmark harness compile) ..."
+if ! python3 perfbench/build.py >/tmp/graft_precommit_bench.log 2>&1; then
+  tail -30 /tmp/graft_precommit_bench.log
+  echo "[precommit] FAIL: the benchmark harness does not compile — do NOT commit." >&2
+  exit 1
+fi
+echo "[precommit] harness compile OK"
 
 if [[ "${1:-}" == "--test" ]]; then
   echo "[precommit] sbt test ..."
