@@ -15,8 +15,9 @@ import org.apache.spark.sql.graftshim.ColumnExpressions
   *  - [[call]] builds the expression straight from Column arguments,
   *    so operators never depend on what a session has registered.
   *
-  * Builders only check arity; argument types are checked in each
-  * expression's `checkInputDataTypes`, because [[call]] hands the
+  * Builders only check arity, failing with Spark's own
+  * `AnalysisException [WRONG_NUM_ARGS]`; argument types are checked in
+  * each expression's `checkInputDataTypes`, because [[call]] hands the
   * builder unresolved children.
   */
 object SqlFunctions {
@@ -25,8 +26,8 @@ object SqlFunctions {
   private def fn(name: String, cls: Class[_], arity: Int)(
       make: Seq[Expression] => Expression): (String, Class[_], Builder) =
     (name, cls, args => {
-      if (args.length != arity) throw new IllegalArgumentException(
-        s"$name expects exactly $arity argument${if (arity == 1) "" else "s"}, got ${args.length}")
+      if (args.length != arity)
+        throw ColumnExpressions.wrongNumArgs(name, arity, args.length)
       make(args)
     })
 

@@ -2417,139 +2417,6 @@ object Streams {
       }
   }
 
-  /** The funnel's fingerprint subtree was renamed `fps/` →
-    * `funnel_fps/` (to stop colliding with [[domainStatsSink]]'s
-    * `fps/`, whose rows carry an extra `domain` column). A statePath
-    * written by the pre-rename version still holds funnel history
-    * under `fps/` — silently ignoring it would restart c4 from empty
-    * with no error, so: a legacy `fps/` subtree CARRYING THE FUNNEL
-    * SCHEMA (fp, cnt, min_id — no `domain`) is renamed in place to
-    * `funnel_fps/` (merged nothing: if `funnel_fps/` also exists the
-    * tree is ambiguous and we fail loudly instead). A `fps/` subtree
-    * WITH a `domain` column is the domain sink's — left alone.
-    */
-  /** Roots already checked this JVM — the migration verdict is stable
-    * once reached (migrated, or the subtree is the domain sink's), so
-    * the per-micro-batch hot path must not re-list and re-infer the
-    * growing fps/batch=* tree forever. */
-  private val funnelFpsChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** `Some(fps path)` iff the state root holds a legacy `fps/`
-    * subtree that (a) exists, (b) carries at least one COMMITTED part
-    * file, and (c) infers the FUNNEL schema (fp, cnt, min_id — no
-    * `domain`). `None` otherwise — including the not-listable /
-    * still-being-written cases the migration must also skip. Pure
-    * inspection: shared by the WRITE path (which then renames) and
-    * the READ path (which must not — r13 ADVICE: a read-only readout
-    * performing renames can race a concurrent writer sharing the
-    * state root).
-    */
-  /** One listing + one schema read classifies the legacy subtree for
-    * BOTH call sites (review r14: the migrate path used to re-read
-    * the same parquet footer legacyFunnelFps had just read).
-    */
-  private final case class LegacyFpsProbe(
-      funnel: Option[org.apache.hadoop.fs.Path],
-      cols: Set[String],
-      exists: Boolean)
-
-  private def legacyFunnelFps(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): LegacyFpsProbe = {
-    import org.apache.hadoop.fs.Path
-    val legacy = new Path(root, "fps")
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(legacy)) return LegacyFpsProbe(None, Set.empty, exists = false)
-    // schema inference needs at least one COMMITTED part file — a
-    // crashed write can leave only _temporary/_SUCCESS droppings, and
-    // read.parquet on that throws; an empty tree carries no history
-    val hasCommitted = {
-      val qLegacy = fs.makeQualified(legacy)
-      def clean(p: org.apache.hadoop.fs.Path): Boolean = {
-        var q = p
-        while (q != null && q != qLegacy) {
-          val n = q.getName
-          if (n.startsWith("_") || n.startsWith(".")) return false
-          q = q.getParent
-        }
-        true
-      }
-      val it = fs.listFiles(legacy, /*recursive=*/ true)
-      var found = false
-      while (it.hasNext && !found) found = clean(it.next().getPath)
-      found
-    }
-    if (!hasCommitted) return LegacyFpsProbe(None, Set.empty, exists = true)
-    val cols = spark.read.parquet(legacy.toString).schema.fieldNames.toSet
-    val isFunnelSchema = cols.contains("fp") && cols.contains("min_id") &&
-      !cols.contains("domain")
-    LegacyFpsProbe(if (isFunnelSchema) Some(legacy) else None, cols,
-      exists = true)
-  }
-
-  /** The funnel-fingerprint subtree the READ path should consume:
-    * `funnel_fps/` when present, the legacy funnel-schema `fps/` when
-    * only that exists — resolved WITHOUT renaming anything (the write
-    * path migrates; a readout must not mutate a state root it may be
-    * sharing with a live writer). The both-exist case is the same
-    * ambiguity the write path refuses, stated here read-only.
-    */
-  private def resolveFunnelFps(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(root, "funnel_fps")
-    // the write-path memo is just as valid here: "checked" means the
-    // legacy tree was migrated, absent, or classified foreign — the
-    // readout resolves straight to funnel_fps/ without re-listing
-    // (review r14: each readout paid O(LIST) + a footer read)
-    if (funnelFpsChecked.contains(root.toString)) return target
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val probe = legacyFunnelFps(spark, root)
-    val legacy = probe.funnel
-    if (!probe.exists || probe.cols.contains("domain"))
-      funnelFpsChecked.add(root.toString)
-    if (fs.exists(target)) {
-      if (legacy.isDefined)
-        throw new IllegalStateException(
-          s"$root holds BOTH a legacy funnel 'fps/' subtree and " +
-            "'funnel_fps/' — reading either alone would under-count " +
-            "history; reconcile manually (move fps/batch=* into " +
-            "funnel_fps/ if the batch ids are disjoint, else drop " +
-            "the stale tree)")
-      target
-    } else legacy.getOrElse(target)
-  }
-
-  private def migrateLegacyFunnelFps(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (funnelFpsChecked.contains(root.toString)) return
-    val probe = legacyFunnelFps(spark, root)
-    if (!probe.exists) { funnelFpsChecked.add(root.toString); return }
-    if (probe.funnel.isEmpty) {
-      // either still being written (not memoized: the writer may be
-      // filling it in) or the domain sink's subtree (memoized)
-      if (probe.cols.contains("domain")) funnelFpsChecked.add(root.toString)
-      return
-    }
-    val legacy = probe.funnel.get
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(root, "funnel_fps")
-    if (fs.exists(target))
-      throw new IllegalStateException(
-        s"$root holds BOTH a legacy funnel 'fps/' subtree and " +
-          "'funnel_fps/' — merging would double-count history; " +
-          "reconcile manually (move fps/batch=* into funnel_fps/ if " +
-          "the batch ids are disjoint, else drop the stale tree)")
-    if (!fs.rename(legacy, target))
-      throw new IllegalStateException(
-        s"failed to migrate legacy funnel state $legacy -> $target")
-    funnelFpsChecked.add(root.toString)
-  }
-
   /** One maintenance step of [[curationFunnelSink]] (package-visible
     * so the spec can drive replay directly).
     */
@@ -2559,7 +2426,6 @@ object Streams {
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     val root = new Path(new Path(statePath).toUri.getPath)
-    migrateLegacyFunnelFps(spark, root)
     val isBench = pmod(col("doc_id"), lit(97L)) === 0
     val scored = graft.operators.Text.withBlocklist(
         graft.operators.Text.withRepetition(
@@ -2632,8 +2498,8 @@ object Streams {
     // blocklist stage lacks c4 rows; silently treating them as 0 (or
     // letting sum skip their NULLs) would report an unscreened history
     // as screened AND mix stage-3 with stage-4 fps survivors — fail
-    // loudly instead (the funnel_fps-migration discipline: replay the
-    // stream into a fresh statePath to upgrade)
+    // loudly instead (replay the stream into a fresh statePath to
+    // upgrade)
     require(raw.columns.contains("c4"),
       s"$croot predates the blocklist funnel stage (no c4 column) — " +
         "replay the stream into a fresh statePath to upgrade")
@@ -2647,10 +2513,7 @@ object Streams {
         coalesce(sum("c2"), lit(0L)).as("c2"),
         coalesce(sum("c3"), lit(0L)).as("c3"),
         coalesce(sum("c4"), lit(0L)).as("c4"))
-    // read path: legacy funnel-schema fps/ is consumed IN PLACE (no
-    // rename — this is a readout; only applyCurationFunnelBatch,
-    // the write path, migrates)
-    val fproot = resolveFunnelFps(spark, root)
+    val fproot = new Path(root, "funnel_fps")
     val canon =
       if (!fs.exists(fproot))
         spark.range(0).select(col("id").as("gmin"))
@@ -2801,8 +2664,7 @@ object Streams {
     // stage-4 passers (benchmark docs included, exactly like the
     // batch keep_id window; a bench canonical correctly kills its
     // non-bench twins)
-    val fproot = resolveFunnelFps(spark, root)
-    val canon = spark.read.parquet(fproot.toString)
+    val canon = spark.read.parquet(new Path(root, "funnel_fps").toString)
       .groupBy("fp").agg(min("min_id").as("gmin"))
     // provisional contamination verdicts (the #150 caveat)
     val vroot = new Path(root, "verdicts")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The custom Catalyst expressions: semantics pinned against the
@@ -341,13 +341,16 @@ class FunctionsSpec extends SparkSpec {
 
   test("a wrong argument count fails analysis with the function's arity") {
     graft.api.Graft.install(spark)
-    val e = intercept[IllegalArgumentException] {
-      spark.sql("SELECT cosine_sim(array(1.0d))").collect()
+    def assertWrongNumArgs(sql: String, name: String, expected: Int,
+        actual: Int): Unit = {
+      val e = intercept[AnalysisException](spark.sql(sql).collect())
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+      val params = e.getMessageParameters
+      assert(params.get("functionName") == s"`$name`")
+      assert(params.get("expectedNum") == expected.toString)
+      assert(params.get("actualNum") == actual.toString)
     }
-    assert(e.getMessage == "cosine_sim expects exactly 2 arguments, got 1")
-    val e1 = intercept[IllegalArgumentException] {
-      spark.sql("SELECT poly_hash('a', 'b')").collect()
-    }
-    assert(e1.getMessage == "poly_hash expects exactly 1 argument, got 2")
+    assertWrongNumArgs("SELECT cosine_sim(array(1.0d))", "cosine_sim", 2, 1)
+    assertWrongNumArgs("SELECT poly_hash('a', 'b')", "poly_hash", 1, 2)
   }
 }

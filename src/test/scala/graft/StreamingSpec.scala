@@ -542,9 +542,13 @@ class StreamingSpec extends SparkSpec {
     val stream = ms.toDF().toDF("doc_id", "text")
     val q = Streams.dupClusterSink(stream, s"$base/state", s"$base/ckpt")
       .start()
+    // at-least-once mid-stream: batch 1 is re-delivered after it
+    // committed, while batch 2 still follows
     try {
-      docs.grouped((docs.size + 2) / 3).foreach { chunk =>
+      docs.grouped((docs.size + 2) / 3).zipWithIndex.foreach { case (chunk, i) =>
         ms.addData(chunk); q.processAllAvailable()
+        if (i == 1) Streams.applyDupClusterBatch(chunk.toDF("doc_id", "text"),
+          1L, s"$base/state", "doc_id", "text", 3, 0.8, Int.MaxValue)
       }
     } finally q.stop()
     val got = Streams.dupClusterState(spark, s"$base/state").get
@@ -767,8 +771,15 @@ class StreamingSpec extends SparkSpec {
     val q3 = Streams.trainingManifestSink(
       ms3.toDF().toDF("doc_id", "text", "lang", "source"),
       s"$base3/state", s"$base3/ckpt").start()
+    // at-least-once mid-stream: batch 1 is re-delivered after it
+    // committed, while batch 2 still follows
     try {
-      chunks.foreach { c => ms3.addData(c); q3.processAllAvailable() }
+      chunks.zipWithIndex.foreach { case (c, i) =>
+        ms3.addData(c); q3.processAllAvailable()
+        if (i == 1) Streams.applyTrainingManifestBatch(
+          c.toDF("doc_id", "text", "lang", "source"), 1L,
+          s"$base3/state", "doc_id", "text", "lang", "source")
+      }
     } finally q3.stop()
     val got3 = Streams.trainingManifestState(spark, s"$base3/state").get
       .collect().map(_.toSeq).toSeq
@@ -1423,8 +1434,19 @@ class StreamingSpec extends SparkSpec {
     // than its smaller id, so each batch pair surfaces exactly once
     // (id_new = the later/larger doc — the #61 keep-first discipline)
     val chunks = rows.grouped((rows.size + 2) / 3).toSeq
+    def replay(c: Seq[(Long, String)], id: Long): Unit =
+      Streams.applyWinnowBatch(c.toDF("doc_id", "text"), id,
+        s"$base/state", "doc_id", "text",
+        graft.operators.Dedup.WinnowK, graft.operators.Dedup.WinnowW,
+        graft.operators.Dedup.WinnowTau,
+        graft.operators.Dedup.WinnowDfCap.toInt)
+    // at-least-once mid-stream: batch 1 is re-delivered after it
+    // committed, while batch 2 still follows
     try {
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
+      chunks.zipWithIndex.foreach { case (c, i) =>
+        ms.addData(c); q.processAllAvailable()
+        if (i == 1) replay(c, 1L)
+      }
     } finally q.stop()
     val got = Streams.winnowVerdicts(spark, s"$base/state").get
       .select(col("id_old").as("doc_a"), col("id_new").as("doc_b"),
@@ -1441,11 +1463,7 @@ class StreamingSpec extends SparkSpec {
     val lastId = new java.io.File(s"$base/state/index").listFiles()
       .map(_.getName.stripPrefix("batch=").toLong).max
     val before = got.collect().toSet
-    Streams.applyWinnowBatch(chunks.last.toDF("doc_id", "text"), lastId,
-      s"$base/state", "doc_id", "text",
-      graft.operators.Dedup.WinnowK, graft.operators.Dedup.WinnowW,
-      graft.operators.Dedup.WinnowTau,
-      graft.operators.Dedup.WinnowDfCap.toInt)
+    replay(chunks.last, lastId)
     val after = Streams.winnowVerdicts(spark, s"$base/state").get
       .select(col("id_old").as("doc_a"), col("id_new").as("doc_b"),
         col("inter").as("shared"), col("jaccard")).collect().toSet
